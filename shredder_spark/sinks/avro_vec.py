@@ -362,28 +362,26 @@ def fixed_width_to_avro_fused(
     out_dir: str,
     *,
     tasks: int = 32,
-    codec: str = "snappy",
-    prefix: str = "part-",
-    batch_rows: int = 65536,
 ) -> int:
-    """Reference-shaped single-stage ingest: each task reads its byte
-    range, numpy-parses the fixed-width matrix, vector-encodes Avro and
-    writes one OCF file — data never materializes as Spark rows and
+    """Reference-shaped single-stage ingest: each task streams its byte
+    ranges through the fixed-width reader's public pair —
+    ``read(part)`` → ``wire_batch`` → ``write_ocf_arrow`` (snappy), one
+    OCF file per range — so data never materializes as Spark rows and
     never crosses into the JVM (cf. the reference's chunked
     parse→serialize pipeline, `fixed2avro/Exporters.go:105-138`). The
     per-partition imperative body is exactly what RDD.mapPartitions is
     for; everything upstream/downstream of ingest stays DataFrame.
 
     Returns total rows written. Output files match
-    ``write_avro_ocf``'s schema (nullable unions) and naming.
+    ``write_avro_ocf``'s schema (nullable unions) and naming. Like
+    ``format("fixedwidth")``, raises on non-ASCII input.
     """
     import os
 
     from shredder_spark.avro_schema import FixedSchema, \
         parse_avro_fixed_schema
     from shredder_spark.sinks.avro import spark_schema_to_avro
-    from shredder_spark.sources.fixedwidth_arrow import (
-        FixedWidthArrowReader, _Range, _parse_batch)
+    from shredder_spark.sources.fixedwidth_arrow import FixedWidthArrowReader
     from shredder_spark.utils import ensure_package_on_executors
 
     fs = schema if isinstance(schema, FixedSchema) \
@@ -394,34 +392,23 @@ def fixed_width_to_avro_fused(
     os.makedirs(out_dir, exist_ok=True)
     planner = FixedWidthArrowReader(
         {"path": path, "cores": str(tasks)}, fs)
-    ranges = [(i, p.path, p.start, p.end)
-              for i, p in enumerate(planner.partitions())]
+    parts = list(enumerate(planner.partitions()))
 
-    def run(it) -> Iterator[tuple]:
-        for i, fpath, s, e in it:
-            rdr = FixedWidthArrowReader({"path": fpath, "cores": "1"}, fs)
-            mat = rdr._matrix(rdr._range_bytes(_Range(fpath, s, e)))
-            rc = RecordCodec(avro_schema)
-            out_path = os.path.join(out_dir, f"{prefix}{i:05d}.avro")
-
-            def gen() -> Iterator[pa.RecordBatch]:
-                for j in range(0, mat.shape[0], batch_rows):
-                    yield wire_batch(_parse_batch(mat[j:j + batch_rows], fs))
-
+    def run(it) -> Iterator[int]:
+        rc = RecordCodec(avro_schema)
+        for i, part in it:
+            out_path = os.path.join(out_dir, f"part-{i:05d}.avro")
             with open(out_path, "wb") as fh:
-                n = write_ocf_arrow(fh, rc, gen(), codec=codec)
+                n = write_ocf_arrow(
+                    fh, rc, map(wire_batch, planner.read(part)))
             if n == 0:
                 os.remove(out_path)
-            yield (i, n)
+            yield n
 
-    # Pack ranges into exactly ``tasks`` partitions (r12: the planner
-    # emits one range per FILE when total/cores exceeds a file's size,
-    # so parallelize(ranges, len(ranges)) ran one task per file — 32
-    # concurrent tasks on the 32-file bench fixture regardless of the
-    # requested shape, which is what inflated every "per-core at the
-    # 4-task shape" figure carried since r8). mapPartitions iterates
-    # the slice's ranges sequentially inside one task.
+    # at most ``tasks`` Spark tasks: the planner emits at least one
+    # range per file, so a many-file input has more ranges than tasks;
+    # each task writes its slice of ranges one after another
     counts = (spark.sparkContext
-              .parallelize(ranges, max(min(tasks, len(ranges)), 1))
+              .parallelize(parts, max(min(tasks, len(parts)), 1))
               .mapPartitions(run).collect())
-    return int(sum(n for _, n in counts))
+    return int(sum(counts))

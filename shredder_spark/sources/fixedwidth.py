@@ -258,12 +258,3 @@ def read_fixed_width_stream(
     ]
     return lines.select(*typed)
 
-
-def fixed_width_select_exprs(schema: str | dict | FixedSchema) -> list[Column]:
-    """The projection expressions alone (for callers composing their own
-    scan, e.g. over an existing DataFrame of lines)."""
-    fs = schema if isinstance(schema, FixedSchema) else parse_avro_fixed_schema(schema)
-    return [
-        _cast_expr(f, _slice_expr(F.col("value"), start, f.length)).alias(f.name)
-        for f, start in fs.field_offsets()
-    ]

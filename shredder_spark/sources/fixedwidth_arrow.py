@@ -1,32 +1,32 @@
-"""Arrow-vectorized fixed-width parse tier (``engine="arrow"``).
+"""Vectorized fixed-width reader: ``spark.read.format("fixedwidth")``.
 
-The expression tier (`fixedwidth.read_fixed_width`) parses ~51 MB/s
-per core at the reference's 4-task shape — the per-column
-`try_cast(substring(...))` chain dominates end-to-end →Avro cost
-(measured: end-to-end = harmonic(parse, serializer), see
-SCALE.md round-8 ingest notes). This tier replaces the JVM cast chain
-with one ``mapInArrow`` pass whose body is pure numpy over the Arrow
-string buffer:
+The declared-ASCII fast path of the fixed-width source. Each input
+partition is a byte range of the feed, read directly in the
+executor's Python worker; the range's rows become an ``n × width``
+byte matrix (``np.frombuffer(...).reshape``, zero copies, when every
+row has the declared width and a CRLF terminator), column slices are
+views, and each column is parsed in one vectorized pass:
 
-- ``spark.read.text`` still does the distributed split (HDFS-style
-  byte ranges + line fixup — the part that must scale), so the tier
-  inherits the expression path's 100 TB scan shape;
-- within a batch, all rows of a fixed-width feed have one width, so
-  the Arrow string column's data buffer IS an ``n × width`` byte
-  matrix — ``np.frombuffer(...).reshape`` with zero copies, column
-  slices are views, and numeric parsing is C-speed ``astype``
-  (~200 MB/s/core full-row, 4× the expression tier);
+- numerics: zero-copy string view → Arrow ``ascii_trim`` + ``cast``;
+  a batch Arrow rejects drops to a numpy parse whose bad or
+  out-of-range values become NULL (the ``try_cast`` contract);
 - the custom ``yyyy-MM-dd-HH.mm.ss[.ffffff]`` timestamps are composed
   from sliced digit fields with the days-from-civil formula — no
   per-row formatter.
 
-Semantics: identical to the expression tier on clean single-byte
-feeds (equality-tested in tests/test_fixedwidth_arrow.py). This is
-the declared-ASCII fast path: like ``encoding="ascii"`` it slices
-bytes, and a malformed numeric field falls back to a per-element
-parse that yields NULL (same null-on-failure contract as try_cast).
-Feeds needing rune-correct slicing or quarantine stay on the
-expression tier.
+Typed Arrow batches cross the Python↔JVM boundary once.
+``sinks/avro_vec.fixed_width_to_avro_fused`` runs the same
+``partitions()`` / ``read(part)`` pair per task and never crosses it.
+
+ASCII contract: the reader slices bytes, so it accepts only ASCII
+input and raises on any range holding a non-ASCII byte. Feeds needing
+rune-correct slicing, quarantine or streaming use the expression tier,
+``sources/fixedwidth.read_fixed_width``; on ASCII feeds both tiers
+produce the same rows (tests/test_fixedwidth_arrow.py).
+
+Split convention (HDFS text splits): each partition owns every line
+that STARTS inside its byte range; a line starting with the footer
+prefix ends the range's scan (`ColumnBuilder.go:211-214`).
 
 Reference parity: same A6-A21 surface as sources/fixedwidth.py
 (`fixed2avro/ColumnBuilder.go:98-227` field loop, reimplemented as
@@ -35,36 +35,25 @@ columnar batch ops).
 
 from __future__ import annotations
 
-from typing import Iterator
+import glob
+import json
+import math
+import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import (
+    DataSource, DataSourceReader, InputPartition)
+from pyspark.sql.types import StructType
 
 from shredder_spark.avro_schema import FixedSchema, parse_avro_fixed_schema
 from shredder_spark.sources.fixedwidth import FOOTER_PREFIX
 
-_SPARK_TYPES = {
-    "boolean": "boolean",
-    "bytes": "binary",
-    "Bytes": "binary",
-    "float": "float",
-    "double": "double",
-    "int": "int",
-    "long": "long",
-    "string": "string",
-    "date": "date",
-    "timestamp-millis": "timestamp",
-    "timestamp-micros": "timestamp",
-}
-
-
-def _ddl(fs: FixedSchema) -> str:
-    return ", ".join(f"{f.name} {_SPARK_TYPES[f.type_name]}"
-                     for f in fs.fields)
+_BATCH_ROWS = 65536  # rows per Arrow batch
+_FOOTER = FOOTER_PREFIX.encode()
 
 
 def _string_array(mat: np.ndarray, start: int, length: int) -> pa.Array:
@@ -80,14 +69,14 @@ def _string_array(mat: np.ndarray, start: int, length: int) -> pa.Array:
 
 def _num_fallback(raw: np.ndarray, dtype):
     """Per-element tolerant parse for a batch where vectorized astype
-    failed: bad field → null (the try_cast contract)."""
+    failed: bad or out-of-range field → null (the try_cast contract)."""
     out = np.zeros(len(raw), dtype=dtype)
     mask = np.zeros(len(raw), dtype=bool)
     py = int if np.issubdtype(dtype, np.integer) else float
     for i, b in enumerate(raw):
         try:
             out[i] = py(b)
-        except ValueError:
+        except (ValueError, OverflowError):
             mask[i] = True
     return out, mask
 
@@ -108,12 +97,19 @@ def _num_array(mat: np.ndarray, start: int, length: int, dtype,
         pass
     raw = np.ascontiguousarray(mat[:, start:start + length]) \
         .view(f"S{length}").ravel()
+    # integers parse as int64 and are range-checked: astype(int32)
+    # wraps out-of-range values silently
+    wide = np.int64 if np.issubdtype(dtype, np.integer) else dtype
     try:
-        vals = raw.astype(dtype)
-        return pa.array(vals, type=pa_type)
-    except ValueError:
-        vals, mask = _num_fallback(raw, dtype)
-        return pa.array(vals, type=pa_type, mask=mask)
+        vals, mask = raw.astype(wide), None
+    except (ValueError, OverflowError):
+        vals, mask = _num_fallback(raw, wide)
+    if wide is not dtype:
+        info = np.iinfo(dtype)
+        out = (vals < info.min) | (vals > info.max)
+        mask = out if mask is None else mask | out
+        vals = vals.astype(dtype)
+    return pa.array(vals, type=pa_type, mask=mask)
 
 
 def _days_from_civil(y: np.ndarray, m: np.ndarray,
@@ -250,91 +246,18 @@ def _parse_batch(mat: np.ndarray, fs: FixedSchema) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(cols, names=names)
 
 
-def read_fixed_width_arrow(
-    spark: SparkSession,
-    path: str,
-    schema: str | dict | FixedSchema,
-    *,
-    line_sep: str = "\r\n",
-    footer_prefix: str = FOOTER_PREFIX,
-) -> DataFrame:
-    """Arrow-tier fixed-width read: same result as
-    ``read_fixed_width(..., encoding="ascii")`` on single-byte feeds,
-    parsed in numpy batches instead of per-column JVM casts."""
-    fs = schema if isinstance(schema, FixedSchema) \
-        else parse_avro_fixed_schema(schema)
-    width = fs.row_width
-
-    lines = spark.read.text(path, lineSep=line_sep)
-    if footer_prefix:
-        lines = lines.filter(~F.col("value").startswith(footer_prefix))
-    lines = lines.filter(F.length("value") > 0)
-
-    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            col = batch.column(0)
-            if isinstance(col, pa.ChunkedArray):  # pragma: no cover
-                col = col.combine_chunks()
-            n = len(col)
-            if n == 0:
-                continue
-            buf = None
-            if col.null_count == 0:
-                offs_buf = col.buffers()[1]
-                offsets = np.frombuffer(
-                    offs_buf, dtype=(np.int64 if pa.types.is_large_string(
-                        col.type) else np.int32), count=n + 1,
-                    offset=col.offset * (8 if pa.types.is_large_string(
-                        col.type) else 4))
-                if offsets[-1] - offsets[0] == n * width and \
-                        (np.diff(offsets) == width).all():
-                    data = np.frombuffer(col.buffers()[2], dtype="S1")
-                    buf = data[offsets[0]:offsets[-1]].reshape(n, width)
-            if buf is None:
-                # ragged batch (shouldn't happen on a well-formed
-                # feed): pad/truncate each row to the declared width
-                rows = [v.encode("utf-8", "replace")[:width]
-                        .ljust(width, b" ") if v is not None
-                        else b" " * width for v in col.to_pylist()]
-                buf = np.frombuffer(b"".join(rows), dtype="S1") \
-                    .reshape(len(rows), width)
-            yield _parse_batch(buf, fs)
-
-    return lines.mapInArrow(parse, _ddl(fs))
-
-
-# ---------------------------------------------------------------------
-# DataSource-API variant: the mapInArrow tier above still ships the raw
-# line strings JVM→Python before parsing (spark.read.text does the
-# scan), i.e. the bytes cross the Arrow socket twice. This variant
-# reads the file byte-range DIRECTLY in the executor's Python worker
-# (same split convention as sources/fixedwidth_datasource.py — each
-# partition owns every line that STARTS inside its range) and yields
-# TYPED Arrow batches, so data crosses the boundary once.
-
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSource, DataSourceReader, InputPartition)
-from pyspark.sql.types import StructType  # noqa: E402
-
-_ARROW_BATCH_ROWS = 65536
-
-
 class _Range(InputPartition):
     def __init__(self, path: str, start: int, end: int):
         self.path, self.start, self.end = path, start, end
 
 
-class FixedWidthArrowDataSource(DataSource):
-    """``format("fixedwidth_arrow")`` — vectorized fixed-width reader.
-
-    Options: ``path``, ``fixed_schema`` (Avro+len JSON), ``cores``
-    (input partitions, default 8), ``footer_prefix``, ``batch_rows``
-    (rows per Arrow batch crossing to the JVM, default 65536).
-    """
+class FixedWidthDataSource(DataSource):
+    """``format("fixedwidth")`` — options: ``path``, ``fixed_schema``
+    (Avro+len JSON) and ``cores`` (input partitions, default 8)."""
 
     @classmethod
     def name(cls) -> str:
-        return "fixedwidth_arrow"
+        return "fixedwidth"
 
     def _fixed(self) -> FixedSchema:
         return parse_avro_fixed_schema(self.options["fixed_schema"])
@@ -348,16 +271,9 @@ class FixedWidthArrowDataSource(DataSource):
 
 class FixedWidthArrowReader(DataSourceReader):
     def __init__(self, options: dict, fixed: FixedSchema):
-        import glob
-        import os
-
         path = options["path"]
         self.fixed = fixed
         self.cores = int(options.get("cores", "8"))
-        self.batch_rows = int(options.get("batch_rows",
-                                          str(_ARROW_BATCH_ROWS)))
-        self.footer_prefix = options.get(
-            "footer_prefix", FOOTER_PREFIX).encode()
         if os.path.isdir(path):
             # Spark text-source directory convention: every data file
             # (skip _SUCCESS/_manifest dotfiles)
@@ -370,8 +286,6 @@ class FixedWidthArrowReader(DataSourceReader):
         self.sizes = {f: os.path.getsize(f) for f in self.files}
 
     def partitions(self):
-        import math
-
         total = sum(self.sizes.values())
         if total == 0:
             return [_Range(self.files[0] if self.files else "", 0, 0)]
@@ -399,19 +313,18 @@ class FixedWidthArrowReader(DataSourceReader):
     def _matrix(self, data: bytes) -> np.ndarray:
         """bytes → n×width matrix. Fast path: uniform width+CRLF rows
         reshape in place; otherwise line-split with space padding
-        (clean-feed tier: width deviations are data errors that the
-        null-on-failure casts surface)."""
+        (width deviations are data errors that the null-on-failure
+        casts surface)."""
         w = self.fixed.row_width
         w2 = w + 2
         if data and len(data) % w2 == 0:
             mat = np.frombuffer(data, dtype="S1").reshape(-1, w2)
             if (mat[:, w] == b"\r").all() and (mat[:, w + 1] == b"\n").all():
                 mat = mat[:, :w]
-                fp = self.footer_prefix
-                if fp and len(fp) <= w:
+                if len(_FOOTER) <= w:
                     is_footer = (
-                        mat[:, :len(fp)].view(np.uint8)
-                        == np.frombuffer(fp, np.uint8)).all(axis=1)
+                        mat[:, :len(_FOOTER)].view(np.uint8)
+                        == np.frombuffer(_FOOTER, np.uint8)).all(axis=1)
                     if is_footer.any():
                         mat = mat[:int(np.argmax(is_footer))]
                 return mat
@@ -420,7 +333,7 @@ class FixedWidthArrowReader(DataSourceReader):
             line = line.rstrip(b"\r")
             if not line:
                 continue
-            if self.footer_prefix and line.startswith(self.footer_prefix):
+            if line.startswith(_FOOTER):
                 break
             rows.append(line[:w].ljust(w, b" "))
         if not rows:
@@ -428,39 +341,39 @@ class FixedWidthArrowReader(DataSourceReader):
         return np.frombuffer(b"".join(rows), dtype="S1").reshape(-1, w)
 
     def read(self, part: _Range):
-        mat = self._matrix(self._range_bytes(part))
-        for i in range(0, max(1, mat.shape[0]), self.batch_rows):
-            chunk = mat[i:i + self.batch_rows]
+        data = self._range_bytes(part)
+        if not data.isascii():
+            # byte slicing would shift every field after a multibyte
+            # rune and emit invalid UTF-8 strings without an error
+            raise ValueError(
+                f"{part.path} [{part.start}, {part.end}): non-ASCII "
+                "bytes; format('fixedwidth') slices bytes — read this "
+                "feed with sources.fixedwidth.read_fixed_width, which "
+                "slices runes")
+        mat = self._matrix(data)
+        for i in range(0, max(1, mat.shape[0]), _BATCH_ROWS):
+            chunk = mat[i:i + _BATCH_ROWS]
             if chunk.shape[0] or i == 0:
                 yield _parse_batch(chunk, self.fixed)
 
 
-def register_fixedwidth_arrow_source(spark: SparkSession) -> None:
-    spark.dataSource.register(FixedWidthArrowDataSource)
+def register_fixedwidth_source(spark: SparkSession) -> None:
+    spark.dataSource.register(FixedWidthDataSource)
 
 
 def read_fixed_width_arrow_ds(
     spark: SparkSession,
     path: str,
-    schema: str | dict | FixedSchema,
+    schema: str | dict,
     *,
     cores: int | None = None,
-    batch_rows: int | None = None,
 ) -> DataFrame:
-    """Vectorized DataSource tier: one Arrow crossing, executor-side
-    byte-range reads."""
-    import json as _json
-
-    register_fixedwidth_arrow_source(spark)
-    fs_json = schema if isinstance(schema, str) else _json.dumps(
-        schema if isinstance(schema, dict) else None)
-    if fs_json is None or fs_json == "null":
-        raise ValueError("pass the schema as JSON text/dict for the "
-                         "DataSource tier")
-    reader = (spark.read.format("fixedwidth_arrow")
-              .option("fixed_schema", fs_json))
+    """``format("fixedwidth")`` over ``path``: executor-side byte-range
+    reads, one Arrow crossing."""
+    register_fixedwidth_source(spark)
+    reader = (spark.read.format("fixedwidth")
+              .option("fixed_schema", schema if isinstance(schema, str)
+                      else json.dumps(schema)))
     if cores is not None:
         reader = reader.option("cores", str(cores))
-    if batch_rows is not None:
-        reader = reader.option("batch_rows", str(batch_rows))
     return reader.load(path)

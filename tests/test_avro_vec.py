@@ -208,6 +208,50 @@ def test_fused_fixed_width_to_avro(spark, tmp_path):
     assert want.exceptAll(got).count() == 0
 
 
+def test_fused_kernel_bytes_equal_single_thread_replay(spark, tmp_path):
+    """Each fused output file is byte-identical to a driver-side run of
+    the reader's public pair over the same range — read(part) →
+    wire_batch → write_ocf_arrow — the replay the benchmark times
+    layer by layer."""
+    import os
+
+    from shredder_spark.avro_schema import parse_avro_fixed_schema
+    from shredder_spark.sinks.avro import spark_schema_to_avro
+    from shredder_spark.sinks.avro_vec import fixed_width_to_avro_fused
+    from shredder_spark.sources.fixedwidth_arrow import FixedWidthArrowReader
+    from tests.fixtures import F2_ALLTYPES_SCHEMA, write_f2
+
+    feed = str(tmp_path / "f2.txt")
+    write_f2(feed, rows=3000)
+    out = str(tmp_path / "fused")
+    n = fixed_width_to_avro_fused(spark, feed, F2_ALLTYPES_SCHEMA, out,
+                                  tasks=3)
+    assert n == 3000
+
+    fs = parse_avro_fixed_schema(F2_ALLTYPES_SCHEMA)
+    rc = RecordCodec(spark_schema_to_avro(fs.to_struct_type()))
+    planner = FixedWidthArrowReader({"path": feed, "cores": "3"}, fs)
+    parts = planner.partitions()
+    assert len(parts) == 3
+    for i, part in enumerate(parts):
+        buf = io.BytesIO()
+        write_ocf_arrow(buf, rc, map(wire_batch, planner.read(part)),
+                        codec="snappy")
+        with open(os.path.join(out, f"part-{i:05d}.avro"), "rb") as fh:
+            assert fh.read() == buf.getvalue(), f"range {i}"
+
+
+def test_fused_kernel_rejects_non_ascii(spark, tmp_path):
+    from shredder_spark.sinks.avro_vec import fixed_width_to_avro_fused
+    from tests.fixtures import F3_UTF8_SCHEMA, write_f3
+
+    feed = str(tmp_path / "f3.txt")
+    write_f3(feed, rows=10)
+    with pytest.raises(Exception, match="read_fixed_width"):
+        fixed_width_to_avro_fused(spark, feed, F3_UTF8_SCHEMA,
+                                  str(tmp_path / "out"), tasks=2)
+
+
 def test_encode_batch_rows_per_record():
     rc = RecordCodec(SCHEMA)
     rows = _random_rows(400, 17)

@@ -1,11 +1,12 @@
-"""Arrow-vectorized fixed-width tier vs the expression tier.
+"""The numpy fixed-width reader vs the expression tier.
 
-The contract is EQUALITY: on a clean single-byte feed both tiers
-produce the same typed rows (the Arrow tier is the throughput path,
-the expression tier is the semantics reference — itself golden-tested
-in test_fixedwidth.py). Edge legs cover bad numerics → null, footer
-stop, blank lines, fraction-less timestamps, pre-1970 dates, and the
-ragged-line fallback, each against the expression tier's output.
+The contract is EQUALITY: on an ASCII feed both tiers produce the same
+typed rows (the numpy reader is the throughput path, the expression
+tier is the semantics reference — itself golden-tested in
+test_fixedwidth.py). Edge legs cover bad numerics → null, integer
+overflow → null, footer stop, blank lines, fraction-less timestamps,
+pre-1970 dates, and the ragged-line fallback, each against the
+expression tier's output.
 """
 
 from __future__ import annotations
@@ -15,10 +16,7 @@ import json
 import pytest
 
 from shredder_spark.sources.fixedwidth import read_fixed_width
-from shredder_spark.sources.fixedwidth_arrow import (
-    read_fixed_width_arrow,
-    read_fixed_width_arrow_ds,
-)
+from shredder_spark.sources.fixedwidth_arrow import read_fixed_width_arrow_ds
 
 SCHEMA = {
     "type": "record",
@@ -77,12 +75,6 @@ def _assert_equal(a, e):
     assert e.exceptAll(a).count() == 0
 
 
-def test_arrow_map_tier_equals_expression_tier(spark, feed):
-    a = read_fixed_width_arrow(spark, feed, SCHEMA)
-    e = read_fixed_width(spark, feed, SCHEMA)
-    _assert_equal(a, e)
-
-
 def test_arrow_datasource_tier_equals_expression_tier(spark, feed):
     a = read_fixed_width_arrow_ds(spark, feed, json.dumps(SCHEMA), cores=3)
     e = read_fixed_width(spark, feed, SCHEMA)
@@ -91,9 +83,8 @@ def test_arrow_datasource_tier_equals_expression_tier(spark, feed):
 
 def test_footer_stops_scan(spark, tmp_path):
     # reference semantics (ColumnBuilder.go:211-214): the footer
-    # TERMINATES the scan — rows after it never parse. The DataSource
-    # tiers implement termination (like fixedwidth_datasource.py); the
-    # expression tier approximates it with a filter, which only
+    # TERMINATES the scan — rows after it never parse. The numpy
+    # reader implements termination; the expression tier approximates it with a filter, which only
     # matches when the footer is the last line (the real-feed shape).
     p = tmp_path / "footer.txt"
     body = [LINES[0], "*" * 12 + " trailer".ljust(W - 20), LINES[1]]
@@ -136,3 +127,23 @@ def test_multifile_directory(spark, tmp_path):
                                   cores=4)
     assert a.count() == 4
     assert {r.id for r in a.collect()} == {1, -22, 4, 5}
+
+
+def test_integer_overflow_is_null(spark, tmp_path):
+    # out-of-range integers: try_cast gives NULL on the expression
+    # tier; the numpy fallback must not wrap (int) or raise (long)
+    schema = {"type": "record", "name": "ovf", "encoding": "ascii",
+              "fields": [{"name": "i", "type": "int", "len": 11},
+                         {"name": "l", "type": "long", "len": 20}]}
+    rows = [("99999999999", "99999999999999999999"),
+            ("3000000000", "12"),
+            ("-2147483648", "-9223372036854775808"),
+            ("xx", "9223372036854775808")]
+    p = tmp_path / "ovf.txt"
+    p.write_bytes("".join(f"{i:>11}{l:>20}\r\n" for i, l in rows).encode())
+    a = read_fixed_width_arrow_ds(spark, str(p), json.dumps(schema))
+    e = read_fixed_width(spark, str(p), schema)
+    _assert_equal(a, e)
+    assert sorted(map(tuple, a.collect()), key=repr) == sorted(
+        [(None, None), (None, 12), (-2147483648, -9223372036854775808),
+         (None, None)], key=repr)

@@ -1,15 +1,20 @@
-"""Python Data Source tier of the fixed-width format (B-surface):
-``spark.read.format("fixedwidth")`` must agree row-for-row with the
-expression tier on every fixture, including multibyte rune slicing and
-chunk-boundary alignment."""
+"""``spark.read.format("fixedwidth")`` — the numpy reader as a Spark
+format: it must agree row-for-row with the expression tier on ASCII
+fixtures, plan exactly ``cores`` chunk-aligned partitions, stop at the
+footer, and refuse non-ASCII input instead of mis-slicing it. The
+streaming tier over a landing directory must agree with it file by
+file."""
 
 from __future__ import annotations
 
 import pytest
 
-from shredder_spark.sources.fixedwidth import read_fixed_width
-from shredder_spark.sources.fixedwidth_datasource import (
-    FixedWidthDataSource, read_via_datasource, register_fixedwidth_source,
+from shredder_spark.sources.fixedwidth import (
+    read_fixed_width, read_fixed_width_stream,
+)
+from shredder_spark.sources.fixedwidth_arrow import (
+    FixedWidthDataSource, read_fixed_width_arrow_ds,
+    register_fixedwidth_source,
 )
 from tests.fixtures import (
     F1_WEBLOG_SCHEMA, F2_ALLTYPES_SCHEMA, F3_UTF8_SCHEMA,
@@ -17,22 +22,29 @@ from tests.fixtures import (
 )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
 @pytest.mark.parametrize("schema,writer,fname", [
     (F1_WEBLOG_SCHEMA, write_f1, "f1.txt"),
     (F2_ALLTYPES_SCHEMA, write_f2, "f2.txt"),
-    (F3_UTF8_SCHEMA, write_f3, "f3.txt"),
 ])
 def test_datasource_matches_expression_tier(spark, tmp_path, schema, writer, fname):
     path = str(tmp_path / fname)
     writer(path)
-    via_ds = read_via_datasource(spark, path, schema, cores=5)
+    via_ds = read_fixed_width_arrow_ds(spark, path, schema, cores=5)
     via_expr = read_fixed_width(spark, path, schema)
-    assert via_ds.schema == via_expr.schema
-    assert _rows(via_ds) == _rows(via_expr)
+    # nullability differs (the reader declares every field nullable)
+    assert via_ds.schema.simpleString() == via_expr.schema.simpleString()
+    assert via_ds.count() == via_expr.count()
+    assert via_ds.exceptAll(via_expr).count() == 0
+    assert via_expr.exceptAll(via_ds).count() == 0
+
+
+def test_non_ascii_input_raises(spark, tmp_path):
+    # byte slicing shifts every field after a multibyte rune; the
+    # reader must refuse the feed and point at the rune-correct tier
+    path = str(tmp_path / "f3.txt")
+    write_f3(path, rows=10)
+    with pytest.raises(Exception, match="read_fixed_width"):
+        read_fixed_width_arrow_ds(spark, path, F3_UTF8_SCHEMA).collect()
 
 
 def test_partition_planning_and_boundary_alignment(spark, tmp_path):
@@ -41,9 +53,9 @@ def test_partition_planning_and_boundary_alignment(spark, tmp_path):
     # common/fixed.go:150-164).
     path = str(tmp_path / "f1.txt")
     write_f1(path, rows=1000)
-    register_fixedwidth_source(spark)
     for cores in (1, 3, 7, 16):
-        df = read_via_datasource(spark, path, F1_WEBLOG_SCHEMA, cores=cores)
+        df = read_fixed_width_arrow_ds(spark, path, F1_WEBLOG_SCHEMA,
+                                       cores=cores)
         assert df.rdd.getNumPartitions() == cores
         ids = sorted(r[0] for r in df.select(df.columns[0]).collect())
         assert ids == list(range(1000)), f"cores={cores}"
@@ -54,119 +66,54 @@ def test_footer_terminates_scan(spark, tmp_path):
     # footer may surface (ColumnBuilder.go:211-214 semantics).
     path = str(tmp_path / "f2.txt")
     write_f2(path, rows=100)
-    df = read_via_datasource(spark, path, F2_ALLTYPES_SCHEMA, cores=1)
+    df = read_fixed_width_arrow_ds(spark, path, F2_ALLTYPES_SCHEMA, cores=1)
     assert df.count() == 100
 
 
 def test_format_name_registered(spark):
     assert FixedWidthDataSource.name() == "fixedwidth"
+    register_fixedwidth_source(spark)
     register_fixedwidth_source(spark)  # idempotent re-register
 
 
 def test_streaming_tier_tails_landing_dir(spark, tmp_path):
-    """Streaming tier: readStream.format('fixedwidth') over a landing
-    directory ingests each dropped file exactly once; the accumulated
-    stream equals a batch parse of the same files."""
-    import json
-    import os
-
+    """Streaming tier: read_fixed_width_stream over a landing directory
+    ingests each dropped file exactly once; the accumulated stream
+    equals a batch parse of the same files."""
     land = tmp_path / "land"
     land.mkdir()
     write_f1(str(land / "a.txt"), rows=40)
     write_f1(str(land / "b.txt"), rows=25)
 
-    register_fixedwidth_source(spark)
-    from shredder_spark.avro_schema import parse_avro_fixed_schema
-    fs = parse_avro_fixed_schema(F1_WEBLOG_SCHEMA)
-    schema_text = json.dumps({
-        "name": fs.name, "type": "record",
-        "fields": [{"name": f.name, "type": f.type_name, "len": f.length}
-                   for f in fs.fields],
-    })
-    stream = (spark.readStream.format("fixedwidth")
-              .option("fixed_schema", schema_text)
-              .load(str(land)))
-
+    stream = read_fixed_width_stream(spark, str(land), F1_WEBLOG_SCHEMA)
     collected: list = []
 
     def _sink(bdf, _):
         collected.extend(tuple(r) for r in bdf.collect())
 
     ck = str(tmp_path / "ck")
-    q = (stream.writeStream.outputMode("append")
-         .option("checkpointLocation", ck)
-         .foreachBatch(_sink).trigger(availableNow=True).start())
-    q.awaitTermination(120)
 
-    batch = read_via_datasource(spark, str(land / "a.txt"), F1_WEBLOG_SCHEMA)
-    batch2 = read_via_datasource(spark, str(land / "b.txt"), F1_WEBLOG_SCHEMA)
-    # stream surfaces raw strings; compare against the raw tier of the
-    # batch reader (same slicing, pre-cast)
-    raw = (spark.read.format("fixedwidth")
-           .option("fixed_schema", schema_text)
-           .load(str(land / "a.txt")))
-    raw2 = (spark.read.format("fixedwidth")
-            .option("fixed_schema", schema_text)
-            .load(str(land / "b.txt")))
-    expect = sorted([tuple(r) for r in raw.collect()] +
-                    [tuple(r) for r in raw2.collect()])
+    def _drain():
+        q = (stream.writeStream.outputMode("append")
+             .option("checkpointLocation", ck)
+             .foreachBatch(_sink).trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        assert not q.isActive
+
+    _drain()
+    expect = sorted(
+        tuple(r)
+        for name in ("a.txt", "b.txt")
+        for r in read_fixed_width_arrow_ds(
+            spark, str(land / name), F1_WEBLOG_SCHEMA).collect())
+    assert len(expect) == 65
     assert sorted(collected) == expect
 
     # second drop: only the new file's rows arrive (exactly-once per file)
     write_f1(str(land / "c.txt"), rows=10)
     collected.clear()
-    q = (stream.writeStream.outputMode("append")
-         .option("checkpointLocation", ck)
-         .foreachBatch(_sink).trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    _drain()
+    assert sorted(collected) == sorted(
+        tuple(r) for r in read_fixed_width_arrow_ds(
+            spark, str(land / "c.txt"), F1_WEBLOG_SCHEMA).collect())
     assert len(collected) == 10
-
-
-def test_streaming_offsets_cumulative_no_redrop_reingest():
-    """Unit tier (no Spark): committed names persist in the offset even
-    after the file leaves the directory, so a delete-then-redrop under
-    the same name is NOT ingested twice; bare-name entries from
-    pre-size checkpoints still resolve."""
-    import json
-    import tempfile
-    import os as _os
-
-    from shredder_spark.avro_schema import parse_avro_fixed_schema
-    from shredder_spark.sources.fixedwidth_datasource import (
-        FixedWidthStreamReader,
-    )
-    from tests.fixtures import F1_WEBLOG_SCHEMA, write_f1
-
-    fs = parse_avro_fixed_schema(F1_WEBLOG_SCHEMA)
-    with tempfile.TemporaryDirectory() as land:
-        write_f1(_os.path.join(land, "a.txt"), rows=5)
-        rdr = FixedWidthStreamReader({"path": land}, fs)
-
-        rows1, off1 = rdr.read(rdr.initialOffset())
-        assert len(list(rows1)) == 5
-        assert [e[0] for e in off1["files"]] == ["a.txt"]
-        assert off1["files"][0][1] > 0  # observed size recorded
-
-        # delete a.txt, redrop same name with different content size
-        _os.remove(_os.path.join(land, "a.txt"))
-        write_f1(_os.path.join(land, "a.txt"), rows=9)
-        rows2, off2 = rdr.read(off1)
-        assert list(rows2) == []  # committed name stays excluded
-        assert [e[0] for e in off2["files"]] == ["a.txt"]
-
-        # a genuinely new file still arrives, offset accumulates
-        write_f1(_os.path.join(land, "b.txt"), rows=3)
-        rows3, off3 = rdr.read(off2)
-        assert len(list(rows3)) == 3
-        assert [e[0] for e in off3["files"]] == ["a.txt", "b.txt"]
-
-        # replay between offsets is by name diff
-        replay = list(rdr.readBetweenOffsets(off2, off3))
-        assert len(replay) == 3
-
-        # pre-size checkpoint shape (bare names) still resolves
-        legacy = {"files": ["a.txt", "b.txt"]}
-        rows4, _ = rdr.read(legacy)
-        assert list(rows4) == []
-        # JSON round-trip (what the checkpoint log does) is stable
-        assert json.loads(json.dumps(off3)) == off3

@@ -6,6 +6,8 @@ these assertions can.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -13,6 +15,7 @@ from shredder_spark import queries as Q
 from shredder_spark.plans import inspect as P
 
 SF = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -146,13 +149,23 @@ def test_rebalance_and_repartition_hints(spark, reg):
     assert "Exchange" in plan and "hashpartitioning(o_custkey" in plan
 
 
+def test_package_imported_from_this_checkout():
+    """The suite and the tools it runs use this checkout's package, not
+    another copy on the path."""
+    import shredder_spark
+
+    pkg = os.path.realpath(shredder_spark.__file__)
+    assert pkg.startswith(os.path.realpath(ROOT) + os.sep), pkg
+
+
 def test_survey_registry_coverage():
     """SURVEY §2 Part B citations and the query registry stay in sync."""
     import subprocess
     import sys
 
-    r = subprocess.run([sys.executable, "/root/repo/tools/check_coverage.py"],
-                       capture_output=True, text=True)
+    r = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "check_coverage.py")],
+        capture_output=True, text=True)
     assert r.returncode == 0, r.stdout + r.stderr
 
 
@@ -218,7 +231,7 @@ def test_no_raw_row_global_windows_lint():
     import sys
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/tools/lint_global_windows.py"],
+        [sys.executable, os.path.join(ROOT, "tools", "lint_global_windows.py")],
         capture_output=True, text=True)
     assert r.returncode == 0, r.stdout + r.stderr
 
@@ -234,7 +247,7 @@ def test_no_unguarded_descending_sequence_lint():
     import sys
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/tools/lint_descending_sequence.py"],
+        [sys.executable, os.path.join(ROOT, "tools", "lint_descending_sequence.py")],
         capture_output=True, text=True)
     assert r.returncode == 0, r.stdout + r.stderr
 
@@ -249,7 +262,7 @@ def test_no_orderdependent_float_sum_lint():
     import sys
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/tools/lint_float_sum_floor.py"],
+        [sys.executable, os.path.join(ROOT, "tools", "lint_float_sum_floor.py")],
         capture_output=True, text=True)
     assert r.returncode == 0, r.stdout + r.stderr
 

@@ -148,6 +148,22 @@ def test_streaming_fixedwidth_ingest_to_avro(spark, tmp_path):
     exp = [r for r in batch.orderBy("Idnr").limit(3).collect()]
     assert [tuple(r) for r in key] == [tuple(r) for r in exp]
 
+    # one more file lands; a restart from the checkpoint ingests only
+    # that file (the file-source log is exactly-once per file)
+    seen = set(os.listdir(out))
+    write_f1(str(land / "f3.txt"), rows=50)
+    q = (stream.writeStream.outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .foreachBatch(_sink).trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    new = sorted(set(os.listdir(out)) - seen)
+    assert len(new) == 1, new  # maxFilesPerTrigger=1: one new epoch
+    got_new = read_avro_ocf(spark, os.path.join(out, new[0]))
+    want_new = read_fixed_width(spark, str(land / "f3.txt"), F1_WEBLOG_SCHEMA)
+    assert got_new.count() == 50
+    assert got_new.exceptAll(want_new).count() == 0
+    assert want_new.exceptAll(got_new).count() == 0
+
 
 def test_stream_stream_interval_join(spark, events, tmp_path):
     """Stream-stream inner interval join == the same batch join

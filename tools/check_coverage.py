@@ -5,16 +5,18 @@ Exit code 1 on any gap."""
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from shredder_spark import queries as Q
 
 
 def main() -> int:
-    survey = open("/root/repo/SURVEY.md").read()
+    survey = open(os.path.join(ROOT, "SURVEY.md")).read()
     section = survey[survey.index("### Part B"):survey.index("\n## 3.")]
     # only table rows carry Verify citations (headings cite historical
     # ranges like "Q01-Q51" that are intentionally sparse)
@@ -38,7 +40,7 @@ def main() -> int:
     # README's registry-range line must match the live registry's max
     # query number (this is what drifted in rounds 2-3)
     hi = max(int(re.match(r"q(\d+)", n).group(1)) for n in Q.registry())
-    readme = open("/root/repo/README.md").read()
+    readme = open(os.path.join(ROOT, "README.md")).read()
     # anchor on the word "registry" near the range so an unrelated
     # q01–<n> mention elsewhere can't satisfy the check while the
     # actual registry line goes stale (round-6 ADVICE)

@@ -54,6 +54,7 @@ regressions.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -148,7 +149,8 @@ def scan_text(name: str, sql: str) -> list[str]:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     from shredder_spark import queries as queries_mod
 
     reg = queries_mod.registry()
