@@ -40,11 +40,18 @@ def _max_partition_bytes(df: DataFrame) -> int:
     return int(m.group(1)) * _UNIT.get(m.group(2).lower(), 1)
 
 
-def estimated_scan_bytes(df: DataFrame) -> int | None:
-    """Total bytes of the plan's file scans from local stats. None
-    when the plan is not (statable) file-backed; a huge sentinel for
-    remote storage (a real cluster scan — callers treating "bytes >=
-    threshold" as "big input" get the scale-safe branch)."""
+# estimated_scan_bytes of a plan that reads remote storage: a real
+# cluster scan, so at least any size threshold a caller may set —
+# "bytes >= threshold" then means "big input", the scale-safe branch.
+# Never add to it: it is a marker, not a size.
+REMOTE_SCAN_BYTES = 1 << 60
+
+
+def _scan_files(df: DataFrame) -> tuple[list[str], int] | None:
+    """``(files, total_bytes)`` of the plan's file scans, listing
+    ``df.inputFiles()`` once (one Py4J round trip). None when the plan
+    is not (statable) file-backed; total ``REMOTE_SCAN_BYTES`` when
+    any file is on remote storage."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -58,28 +65,33 @@ def estimated_scan_bytes(df: DataFrame) -> int | None:
         elif "://" not in f:
             p = f
         else:
-            return 1 << 60  # remote storage => real cluster scan
+            return files, REMOTE_SCAN_BYTES
         try:
             total += os.path.getsize(p)
         except OSError:
             return None
-    return total
+    return files, total
+
+
+def estimated_scan_bytes(df: DataFrame) -> int | None:
+    """Total bytes of the plan's file scans from local stats. None
+    when the plan is not (statable) file-backed; ``REMOTE_SCAN_BYTES``
+    for remote storage."""
+    scan = _scan_files(df)
+    return None if scan is None else scan[1]
 
 
 def estimated_scan_splits(df: DataFrame) -> int | None:
     """Rough split count of the plan's file scans, from file sizes and
     the session's ``maxPartitionBytes``/``openCostInBytes`` packing
     rule. None when the plan is not (statable) file-backed."""
-    total = estimated_scan_bytes(df)
-    if total is None:
+    scan = _scan_files(df)
+    if scan is None:
         return None
-    if total >= 1 << 60:
+    files, total = scan
+    if total == REMOTE_SCAN_BYTES:
         return 1 << 30  # remote storage => real cluster scan
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        return None
-    total += _OPEN_COST * max(n_files - 1, 0)
+    total += _OPEN_COST * max(len(files) - 1, 0)
     return max(1, math.ceil(total / _max_partition_bytes(df)))
 
 

@@ -245,7 +245,9 @@ def _q21_builder(spark: SparkSession) -> DataFrame:
     threshold = int(_os.environ.get("SHREDDER_Q21_TIER_MIN_BYTES",
                                     str(256 << 20)))
     nbytes = estimated_scan_bytes(li)
-    if nbytes is not None and nbytes >= threshold:
+    # unknown size means big: an unstatable input must not fall to
+    # the single-task-sort plan
+    if nbytes is None or nbytes >= threshold:
         from shredder_spark.operators.scale_windows import q21_scale
         return q21_scale(spark, catalog.CURRENT_SF_DIR)
     return spark.sql(_Q21_SQL)

@@ -11,13 +11,16 @@ int64 indices, and those gather/scatters were ~90% of encode time):
    widths via threshold sums, string lengths straight from the Arrow
    offsets buffer);
 2. allocate a padded (rows × Σ field-slot-widths) byte matrix plus a
-   same-shape validity mask, where each field owns a fixed column
-   block sized to its batch-max width (varint max ≤ 10, string block
-   = header max + longest value). Every write is then a STRIDED
-   column or block store — no fancy indexing; uniform-width string
-   payloads (the fixed-width-feed shape) land as one reshaped-view
-   block copy, and their constant-width varint headers collapse to
-   memsets;
+   same-shape validity mask that starts all true, where each field
+   owns a fixed column block sized to its batch-max width (varint max
+   ≤ 10, string block = header max + longest value). Every write is
+   then a STRIDED column or block store — no fancy indexing. A varint
+   of ≤ 8 bytes is built in one uint64 per row (7-bit groups spread
+   into bytes, continuation bits OR'ed from a per-width table) and
+   stored as one block; uniform-width string payloads (the
+   fixed-width-feed shape) land as one reshaped-view block copy. A
+   field writes the mask only where it can leave holes: null rows, a
+   varint column whose width varies, strings of unequal length;
 3. one boolean-mask compress of the raveled matrix emits the exact
    row-major Avro byte stream (row lengths → cumsum gives per-row
    offsets for the OCF/Kafka framings).
@@ -76,20 +79,53 @@ def _varint_len(z: np.ndarray) -> np.ndarray:
 
 
 _SHIFTS = np.arange(_VARINT_MAX, dtype=np.uint64) * np.uint64(7)
+# varints of ≤ 8 bytes (values < 2^56) are built one uint64 per row:
+# three spread steps move the 7-bit groups into the low 7 bits of
+# bytes 0..7 (28|28 → 32-bit halves, 14|14 → 16-bit quarters, 7|7 →
+# bytes), then the continuation bits of a width-k varint — 0x80 in
+# bytes 0..k-2 — are OR'ed in from a table indexed by k. The mask of
+# a width-k row is likewise one word: 0x01 in bytes 0..k-1.
+_SPREAD = tuple(tuple(map(np.uint64, step)) for step in (
+    (0x000000000FFFFFFF, 0x00FFFFFFF0000000, 4),
+    (0x00003FFF00003FFF, 0x0FFFC0000FFFC000, 2),
+    (0x007F007F007F007F, 0x3F803F803F803F80, 1)))
+_CONT = np.array([0] + [(1 << 8 * (k - 1)) - 1 & 0x8080808080808080
+                         for k in range(1, 9)], dtype=np.uint64)
+_LIVE = np.array([(1 << 8 * k) - 1 & 0x0101010101010101
+                  for k in range(9)], dtype="<u8")
+
+
+def _bytes8(w: np.ndarray, k: int) -> np.ndarray:
+    """Bytes 0..k-1 of each little-endian uint64 as an (n, k) view."""
+    return w.astype("<u8", copy=False).view(np.uint8).reshape(-1, 8)[:, :k]
 
 
 def _fill_varint(pb: np.ndarray, pm: np.ndarray, off: int,
                  z: np.ndarray, nb: np.ndarray, vmax: int,
-                 valid: np.ndarray | None) -> None:
-    """Varint planes into the padded matrix. Computed as one
-    contiguous (n, vmax) block and stored with a single block write —
-    per-plane column stores hit a different cache line per row (the
-    padded row stride) and were ~3× slower. Dead rows carry garbage
-    bytes, masked off."""
+                 valid: np.ndarray | None, dense: bool) -> None:
+    """Varint bytes into the padded matrix, stored as one (n, vmax)
+    block — per-plane column stores hit a different cache line per row
+    (the padded row stride) and were ~3× slower. ``pm`` starts all
+    true and is written only when the field leaves holes (``dense`` is
+    false: a null row, or a varint shorter than ``vmax``). Dead bytes
+    carry garbage, masked off."""
     if vmax == 1:
         # single-byte fast path (no continuation bit possible)
         pb[:, off] = (z & np.uint64(0x7F)).astype(np.uint8)
-        pm[:, off] = True if valid is None else valid
+        if valid is not None:
+            pm[:, off] = valid
+        return
+    if vmax <= 8:
+        w = z
+        for lo, hi, sh in _SPREAD:
+            w = (w & lo) | ((w & hi) << sh)
+        w |= _CONT[vmax] if dense else np.take(_CONT, nb)
+        pb[:, off:off + vmax] = _bytes8(w, vmax)
+        if dense:
+            return
+        k = nb if valid is None else np.where(valid, nb, 0)
+        pm[:, off:off + vmax] = _bytes8(np.take(_LIVE, k), vmax) \
+            .view(np.bool_)
         return
     planes = ((z[:, None] >> _SHIFTS[:vmax]) & np.uint64(0x7F)) \
         .astype(np.uint8)
@@ -131,7 +167,8 @@ def _prep_field(fname: str, tname: str, null_index: int,
 
         def fill_val(pb, pm, off):
             pb[:, off] = vals
-            pm[:, off] = True if valid is None else valid
+            if valid is not None:
+                pm[:, off] = valid
 
     elif tname in _INT_TYPES:
         iv = pc.fill_null(col, 0) if has_nulls else col
@@ -141,9 +178,10 @@ def _prep_field(fname: str, tname: str, null_index: int,
         z = _zigzag(v)
         vlen = _varint_len(z)
         vslots = int(vlen.max()) if n else 1
+        dense = valid is None and (n == 0 or int(vlen.min()) == vslots)
 
         def fill_val(pb, pm, off):
-            _fill_varint(pb, pm, off, z, vlen, vslots, valid)
+            _fill_varint(pb, pm, off, z, vlen, vslots, valid, dense)
 
     elif tname in ("float", "double"):
         width = 4 if tname == "float" else 8
@@ -156,8 +194,8 @@ def _prep_field(fname: str, tname: str, null_index: int,
 
         def fill_val(pb, pm, off):
             pb[:, off:off + width] = planes
-            pm[:, off:off + width] = (True if valid is None
-                                      else valid[:, None])
+            if valid is not None:
+                pm[:, off:off + width] = valid[:, None]
 
     elif tname in ("string", "bytes"):
         fc = (pc.fill_null(col, "" if tname == "string" else b"")
@@ -178,13 +216,15 @@ def _prep_field(fname: str, tname: str, null_index: int,
         hmax = int(hlen.max()) if n else 1
         wmax = int(lens.max()) if n else 0
         # uniform width + no nulls (the fixed-width-feed shape): the
-        # Arrow payload buffer IS an (n, wmax) matrix — block copy it
+        # Arrow payload buffer IS an (n, wmax) matrix — block copy it,
+        # no mask store
         uniform = (n > 0 and wmax > 0 and valid is None
-                   and bool((lens == wmax).all()))
+                   and int(lens.min()) == wmax)
+        hdense = valid is None and (n == 0 or int(hlen.min()) == hmax)
         vslots = hmax + wmax
 
         def fill_val(pb, pm, off):
-            _fill_varint(pb, pm, off, zl, hlen, hmax, valid)
+            _fill_varint(pb, pm, off, zl, hlen, hmax, valid, hdense)
             poff = off + hmax
             if wmax == 0:
                 return
@@ -192,7 +232,6 @@ def _prep_field(fname: str, tname: str, null_index: int,
                 start = int(src[0])
                 pb[:, poff:poff + wmax] = \
                     data[start:start + n * wmax].reshape(n, wmax)
-                pm[:, poff:poff + wmax] = True
                 return
             cols = np.arange(wmax, dtype=np.int64)
             live = lens[:, None] > cols
@@ -217,7 +256,6 @@ def _prep_field(fname: str, tname: str, null_index: int,
 
         def fill(pb, pm, off):
             pb[:, off] = val_byte
-            pm[:, off] = True
             fill_val(pb, pm, off + 1)
     else:
         length = 1 + np.where(valid, vlen, 0)
@@ -225,7 +263,6 @@ def _prep_field(fname: str, tname: str, null_index: int,
 
         def fill(pb, pm, off):
             pb[:, off] = union_bytes
-            pm[:, off] = True
             fill_val(pb, pm, off + 1)
 
     return _Prep(length, vslots + 1, fill)
@@ -248,11 +285,13 @@ def _encode_core(rc: RecordCodec, batch: pa.RecordBatch):
         preps.append(p)
         total = total + p.length
         width += p.slots
-    # padded layout: every fill below is a strided column/block store;
-    # both matrices are fully written (each field covers all its slot
-    # columns, live or masked), so np.empty is safe
+    # padded layout: every fill below is a strided column/block store.
+    # Each field writes all its slot columns of ``pb``, live or dead,
+    # so np.empty is safe there; ``pm`` starts all true and a field
+    # clears only the holes it can leave (nulls, short varints,
+    # strings shorter than their block)
     pb = np.empty((n, width), dtype=np.uint8)
-    pm = np.empty((n, width), dtype=bool)
+    pm = np.ones((n, width), dtype=bool)
     off = 0
     for p in preps:
         p.fill(pb, pm, off)

@@ -97,6 +97,36 @@ def test_encode_batch_varint_boundaries():
         [pa.array(vals, type=pa.int64())], names=["l"])
     assert encode_batch(rc, batch) == want
 
+    # batches whose varints all have one width (the packed uniform
+    # path, no mask store), width 1..10, each without and with nulls;
+    # equal-length strings ride along (a 1-byte header at width 1, a
+    # 2-byte one above)
+    rng = random.Random(10)
+    rc = RecordCodec(json.dumps({
+        "type": "record", "name": "u", "fields": [
+            {"name": "l", "type": "long"},
+            {"name": "n", "type": ["null", "long"]},
+            {"name": "s", "type": ["null", "string"]}]}))
+    for width in range(1, 11):
+        lo, hi = (1 << 7 * (width - 1)) if width > 1 else 0, \
+            min(1 << 7 * width, 1 << 64) - 1
+        zs = [lo, hi, lo + 1, hi - 1] + [rng.randint(lo, hi)
+                                         for _ in range(60)]
+        vals = [z >> 1 if z % 2 == 0 else -((z + 1) >> 1) for z in zs]
+        text = "x" * (10 if width == 1 else 100)
+        for nulls in (False, True):
+            def maybe(v, i):
+                return None if nulls and i % 3 == 1 else v
+            rows = [(v, maybe(v, i), maybe(text, i))
+                    for i, v in enumerate(vals)]
+            batch = pa.RecordBatch.from_arrays(
+                [pa.array([r[0] for r in rows], type=pa.int64()),
+                 pa.array([r[1] for r in rows], type=pa.int64()),
+                 pa.array([r[2] for r in rows], type=pa.string())],
+                names=["l", "n", "s"])
+            assert encode_batch(rc, batch) == \
+                b"".join(rc.encode(r) for r in rows), (width, nulls)
+
 
 def test_encode_batch_sliced_batch():
     # pa slices carry buffer offsets — the encoder must respect them
@@ -259,3 +289,32 @@ def test_encode_batch_rows_per_record():
     got = encode_batch_rows(rc, _batch(rows))
     assert got == [rc.encode(r) for r in rows]
     assert encode_batch_rows(rc, _batch([])) == []
+
+
+# md5 of the fused kernel's OCF files (part-00000..00002, in name
+# order) for perfbench's 6,000-row seed-1 feed at tasks=3, recorded
+# before the mapped reads, Arrow-first timestamps and packed varints:
+# kernel speed-ups must leave every output byte as it was
+_GOLDEN_FUSED_MD5 = "38209cf415de3f54f702fae0c1df9e66"
+
+
+def test_fused_kernel_golden_md5(spark, tmp_path):
+    import hashlib
+    import os
+
+    from perfbench import gen
+    from shredder_spark.sinks.avro_vec import fixed_width_to_avro_fused
+
+    feed = str(tmp_path / "bench528.txt")
+    gen.write_fixed_width(feed, seed=1, rows=6000)
+    out = str(tmp_path / "fused")
+    n = fixed_width_to_avro_fused(spark, feed, gen.avro_fixed_schema(),
+                                  out, tasks=3)
+    assert n == 6000
+    names = sorted(os.listdir(out))
+    assert names == [f"part-{i:05d}.avro" for i in range(3)]
+    h = hashlib.md5()
+    for name in names:
+        with open(os.path.join(out, name), "rb") as fh:
+            h.update(fh.read())
+    assert h.hexdigest() == _GOLDEN_FUSED_MD5

@@ -147,3 +147,180 @@ def test_integer_overflow_is_null(spark, tmp_path):
     assert sorted(map(tuple, a.collect()), key=repr) == sorted(
         [(None, None), (None, 12), (-2147483648, -9223372036854775808),
          (None, None)], key=repr)
+
+
+# -------------------------------------------------- timestamp kernels
+
+# (value, Arrow's ISO cast accepts it): a rejected value sends its
+# whole batch to the numpy parse, which defines the semantics
+TS_CASES = [
+    ("1995-06-15-10.30.00.123456", True),
+    ("1995-06-15-10.30.00.5", True),      # '.5' then pad spaces
+    ("1995-06-15-10.30.00", True),        # no fraction
+    ("1995-06-15-10.30.00Z", True),       # offset 19 is a separator slot
+    ("2000-02-29-23.59.59.999999", True),
+    ("1969-12-31-23.59.59.1", True),
+    ("1995-06-15-10.30.00.5 3", False),   # digits after a pad space
+    ("1995-02-30-10.30.00", False),       # Feb 30
+    ("1900-02-29-10.30.00", False),       # not a leap year
+    ("1995-06-15-25.30.00", False),       # hour 25
+    ("1995-06-15-10.60.00", False),       # minute 60
+    ("1995-06-15-10.30.60", False),       # second 60 → next minute
+    ("1995-06-15-10.30.60.5", False),
+    ("1995-06-15-10.30.61", False),
+    ("1995-06-15-10.30.00.12Z", False),   # zone suffix
+    ("1995-06-15-10.30.00.5\t", False),   # a tab is not pad
+    (" 1995-06-15-10.30.00.5", False),    # leading space, trimmed
+    ("  1995-06-15-10.30.00", False),
+    ("", False),                          # all-space field
+    ("not-a-ts-aa.bb.cc", False),
+]
+TS_LENS = (19, 20, 26, 30)
+
+
+def _ts_cell(value: str, length: int) -> str:
+    # leading spaces that would push the seconds out of the field are
+    # dropped (a value cut short is outside this test)
+    if len(value.rstrip()) > length:
+        value = value.lstrip()
+    return value[:length].ljust(length)
+
+
+def _ts_matrix(values, length):
+    import numpy as np
+    text = "".join(_ts_cell(v, length) for v in values).encode()
+    return np.frombuffer(text, dtype="S1").reshape(-1, length)
+
+
+@pytest.mark.parametrize("length", TS_LENS)
+def test_ts_arrow_first_equals_numpy_parse(length):
+    import pyarrow as pa
+
+    from shredder_spark.sources import fixedwidth_arrow as fwa
+
+    mat = _ts_matrix([v for v, _ in TS_CASES], length)
+    assert fwa._ts_micros(mat, 0, length).equals(
+        fwa._ts_micros_numpy(mat, 0, length))
+    accepted = []
+    for i, (v, arrow_ok) in enumerate(TS_CASES):
+        row = mat[i:i + 1]
+        want = fwa._ts_micros_numpy(row, 0, length)
+        assert fwa._ts_micros(row, 0, length).equals(want), v
+        try:
+            got = fwa._ts_micros_arrow(row, 0, length)
+        except pa.ArrowInvalid:
+            got = None
+        else:
+            # every value Arrow accepts is the numpy parse's value
+            assert got.equals(want) and got.null_count == 0, v
+            accepted.append(i)
+        if length >= 26:  # the whole value fits: the table holds
+            assert (got is not None) == arrow_ok, v
+    # a batch Arrow accepts whole takes the Arrow path, same values
+    assert fwa._ts_micros_arrow(mat[accepted], 0, length).equals(
+        fwa._ts_micros_numpy(mat[accepted], 0, length))
+
+
+def test_ts_adversarial_feed_equals_expression_tier(spark, tmp_path):
+    schema = {"type": "record", "name": "tsx", "encoding": "ascii",
+              "fields": [{"name": "id", "type": "int", "len": 3}] + [
+                  {"name": f"t{n}", "len": n,
+                   "type": {"type": "long",
+                            "logicalType": "timestamp-micros"}}
+                  for n in TS_LENS]}
+    p = tmp_path / "ts.txt"
+    p.write_bytes("".join(
+        f"{i:>3}" + "".join(_ts_cell(v, n) for n in TS_LENS) + "\r\n"
+        for i, (v, _) in enumerate(TS_CASES)).encode())
+    a = read_fixed_width_arrow_ds(spark, str(p), json.dumps(schema))
+    e = read_fixed_width(spark, str(p), schema)
+    _assert_equal(a, e)
+    got = {r.id: r for r in a.collect()}
+    assert got[1].t26.microsecond == 500000       # '.5' → 500000 µs
+    assert got[11].t26.minute == 31 and got[11].t26.second == 0
+    assert got[16].t30 == got[1].t30             # leading space trimmed
+    assert all(got[i].t26 is None
+               for i in (6, 7, 8, 9, 10, 13, 14, 15, 18, 19))
+
+
+# ------------------------------------------------------ mapped reads
+
+def _reader(path: str, cores: int):
+    from shredder_spark.avro_schema import parse_avro_fixed_schema
+    from shredder_spark.sources.fixedwidth_arrow import FixedWidthArrowReader
+    return FixedWidthArrowReader({"path": path, "cores": str(cores)},
+                                 parse_avro_fixed_schema(SCHEMA))
+
+
+def _rows(reader) -> list:
+    return [r for part in reader.partitions() for b in reader.read(part)
+            for r in b.to_pylist()]
+
+
+def test_empty_file(spark, tmp_path):
+    p = tmp_path / "empty.txt"
+    p.write_bytes(b"")
+    assert _rows(_reader(str(p), 3)) == []
+    assert read_fixed_width_arrow_ds(spark, str(p), json.dumps(SCHEMA)) \
+        .count() == 0
+
+
+def test_last_line_without_newline(spark, tmp_path):
+    p = tmp_path / "nonl.txt"
+    p.write_bytes("\r\n".join(LINES).encode())
+    assert [r["id"] for r in _rows(_reader(str(p), 3))] == \
+        [1, -22, None, 4, 5]
+    _assert_equal(
+        read_fixed_width_arrow_ds(spark, str(p), json.dumps(SCHEMA), cores=3),
+        read_fixed_width(spark, str(p), SCHEMA))
+
+
+def test_range_owning_no_line(tmp_path):
+    # one line, many ranges: only the first range owns it, every other
+    # range starts inside it and yields an empty batch
+    p = tmp_path / "one.txt"
+    p.write_bytes((LINES[0] + "\r\n").encode())
+    reader = _reader(str(p), 7)
+    parts = reader.partitions()
+    assert len(parts) == 7
+    counts = [sum(b.num_rows for b in reader.read(part)) for part in parts]
+    assert counts == [1, 0, 0, 0, 0, 0, 0]
+
+
+def test_file_shorter_than_planned_raises(tmp_path):
+    p = tmp_path / "shrunk.txt"
+    p.write_bytes(("\r\n".join(LINES) + "\r\n").encode())
+    reader = _reader(str(p), 2)
+    parts = reader.partitions()
+    p.write_bytes((LINES[0] + "\r\n").encode())
+    with pytest.raises(ValueError, match="shrunk.txt"):
+        list(reader.read(parts[0]))
+
+
+def test_batches_do_not_alias_the_mapping(tmp_path, monkeypatch):
+    import mmap
+    import types
+
+    from shredder_spark.sources import fixedwidth_arrow as fwa
+
+    made = []
+
+    class Mapping(mmap.mmap):
+        def __new__(cls, *args, **kwargs):
+            m = super().__new__(cls, *args, **kwargs)
+            made.append(m)
+            return m
+
+    monkeypatch.setattr(fwa, "mmap", types.SimpleNamespace(
+        mmap=Mapping, ACCESS_READ=mmap.ACCESS_READ))
+    good = [LINES[0], LINES[1], LINES[3], LINES[4]]
+    p = tmp_path / "feed.txt"
+    p.write_bytes(("\r\n".join(good) + "\r\n").encode())
+    # one row per range, then all rows in one range: single-row column
+    # slices are contiguous views, the case a zero-copy slice aliases
+    for cores in (len(good), 1):
+        made.clear()
+        rows = _rows(_reader(str(p), cores))
+        assert made and all(m.closed for m in made)
+        assert [r["name"] for r in rows] == \
+            ["alpha   ", "beta  x ", "        ", "padded  "]

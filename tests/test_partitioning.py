@@ -47,3 +47,26 @@ def test_spread_big_scan_is_noop(spark, monkeypatch):
     docs = load_table(spark, SF, "documents")
     monkeypatch.setattr(P, "estimated_scan_splits", lambda df: 1 << 20)
     assert P.spread_small_input(docs) is docs
+
+
+def test_remote_input_reads_named_sentinel(spark, monkeypatch):
+    import shredder_spark.partitioning as P
+    docs = load_table(spark, SF, "documents")
+    monkeypatch.setattr(docs, "inputFiles",
+                        lambda: ["s3a://bucket/documents.parquet"])
+    assert P.estimated_scan_bytes(docs) == P.REMOTE_SCAN_BYTES
+    assert estimated_scan_splits(docs) == 1 << 30
+
+
+def test_scan_estimate_lists_input_files_once(spark, monkeypatch):
+    docs = load_table(spark, SF, "documents")
+    files = docs.inputFiles()
+    calls = []
+
+    def listing():
+        calls.append(1)
+        return files
+
+    monkeypatch.setattr(docs, "inputFiles", listing)
+    assert estimated_scan_splits(docs) == 1
+    assert len(calls) == 1

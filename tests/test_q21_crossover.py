@@ -72,3 +72,12 @@ def test_threshold_reads_estimated_scan_bytes(spark, reg):
     li = load_table(spark, SF, "lineitem")
     nbytes = estimated_scan_bytes(li)
     assert nbytes is not None and 0 < nbytes < 256 << 20
+
+
+def test_unknown_size_takes_grouped_tier(spark, reg, monkeypatch):
+    # an input whose size cannot be estimated is treated as big
+    import shredder_spark.partitioning as P
+    monkeypatch.setattr(P, "estimated_scan_bytes", lambda df: None)
+    df = _run_q21(spark, reg, None)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "_sw_b" in plan
