@@ -4,11 +4,15 @@ Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Headline set mirrors SURVEY.md §5.2 bench tier (Q15 agg, Q21 windows,
-Q43 vector similarity) plus scan/join/text representatives, and a
-fixed-width→Avro ingest measurement at BASELINE.md's shape.
+Q43 vector similarity) plus scan/join/text representatives, and two
+ingest legs over perfbench's fixed-width feed at BASELINE.md's shape
+(30 columns, 528 runes, ~1.27 GB), one task per core:
+``ingest_parse`` reads it through ``format("fixedwidth")`` into a noop
+sink and ``ingest_avro`` runs the fused fixed-width → snappy Avro
+kernel.
 
 Round 6 adds the IN-SESSION CONTROL the round-5 verdict asked for
-(ceiling_ab methodology, applied to the query bench): a PINNED
+(interleaved A/B/A, applied to the query bench): a PINNED
 synthetic workload — independent of sf_dir, the registry, and any
 engine code that evolves between rounds — interleaved A/B/A between
 every headline rep. Each headline query runs CYCLES (3) timed reps
@@ -51,8 +55,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -74,8 +80,10 @@ HEADLINE = [
 ]
 
 CYCLES = 3          # timed reps per headline query (median reported)
-CTRL_PER_GAP = 2    # control reps at every query boundary (~62 total)
-TRIM_FRAC = 0.2     # trimmed-core fraction for the control stamp
+# Ingest input rows: the old lineitem-derived fixture's size at sf0.1
+# (4 × 600,572 rows) rounded to the generator's 60 k-row block;
+# × 530 bytes ≈ 1.27 GB.
+INGEST_ROWS = 2_400_000
 # Versioned full-artifact name. Derived, not hardcoded (the r9/r10
 # stale-tag bug overwrote committed BENCH_r09_full.json twice; the
 # r11 max+1 rule then labeled the driver's bench one round AHEAD —
@@ -135,7 +143,75 @@ ROUND_TAG = _round_tag()
 # every committed artifact carries the same session-speed stamp
 # (shredder_spark/benchcontrol.py holds the do-not-re-pin warning).
 from shredder_spark.benchcontrol import (  # noqa: E402
-    CONTROL_REF_S, control_once as _control, drain as _drain)
+    GapControl, control_once as _control, drain as _drain)
+
+
+def _bench_ingest(spark) -> dict:
+    """Time the two shipping ingest tiers on ``INGEST_ROWS`` rows of
+    perfbench's fixed-width feed: one untimed warm pass per leg, then
+    the min of 2 timed passes. Every fused pass must report the
+    generated row count, and Spark's Avro reader decodes the first
+    fused output once against the generator's checksums; a mismatch
+    raises. The input lives in a temp dir on tmpfs when there is one."""
+    from perfbench import gen
+    from shredder_spark.sinks.avro import AVRO_FORMAT
+    from shredder_spark.sinks.avro_vec import fixed_width_to_avro_fused
+    from shredder_spark.sources.fixedwidth_arrow import (
+        read_fixed_width_arrow_ds)
+
+    cores = spark.sparkContext.defaultParallelism
+    schema = gen.avro_fixed_schema()
+    tmp = tempfile.mkdtemp(prefix="shredder_ingest_", dir=(
+        "/dev/shm" if os.path.isdir("/dev/shm") else None))
+    try:
+        path, out = os.path.join(tmp, "input.txt"), os.path.join(tmp, "avro")
+        truth = gen.write_fixed_width(path, seed=0, rows=INGEST_ROWS)
+
+        def parse() -> None:
+            _drain(read_fixed_width_arrow_ds(spark, path, schema, cores=cores))
+
+        def avro() -> None:
+            n = fixed_width_to_avro_fused(spark, path, schema, out, tasks=cores)
+            if n != truth["rows"]:
+                raise RuntimeError(f"fused ingest wrote {n} rows, "
+                                   f"not {truth['rows']}")
+
+        def verify() -> None:
+            got = (spark.read.format(AVRO_FORMAT).load(out)
+                   .selectExpr("count(*) AS `_rows`", *[
+                       gen.checksum_sql(n, t) for n, t, _ in gen.FIELDS])
+                   .first().asDict())
+            bad = sorted(k for k, v in truth["sums"].items() if got[k] != v)
+            if got["_rows"] != truth["rows"] or bad:
+                raise RuntimeError(f"fused Avro output decodes to "
+                                   f"{got['_rows']} rows, bad columns {bad}")
+
+        def timed(leg) -> float:
+            t0 = time.perf_counter()
+            leg()
+            return time.perf_counter() - t0
+
+        parse()  # untimed warm passes; the first fused output is checked
+        parse_s = min(timed(parse) for _ in range(2))
+        avro()
+        verify()
+        avro_s = min(timed(avro) for _ in range(2))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    mb = truth["bytes"] / 1e6
+    return {
+        "timings": {"ingest_parse": round(parse_s, 4),
+                    "ingest_avro": round(avro_s, 4)},
+        "ingest": {
+            "input_bytes": truth["bytes"],
+            "input_lines": truth["rows"],
+            "cores": cores,
+            "parse_mb_per_s": round(mb / parse_s, 2),
+            "parse_mb_per_s_per_core": round(mb / parse_s / cores, 2),
+            "avro_mb_per_s": round(mb / avro_s, 2),
+            "avro_mb_per_s_per_core": round(mb / avro_s / cores, 2),
+        },
+    }
 
 
 def main() -> None:
@@ -153,36 +229,22 @@ def main() -> None:
         _drain(reg[name].run(spark, sf_dir))
 
     # Interleaved timed passes with BRACKETING control gaps: a gap of
-    # CTRL_PER_GAP control reps runs at every query boundary, so each
-    # query rep is bracketed by the gap before and the gap after it.
-    # Each rep then normalizes by its LOCAL bracketing controls — a VM
-    # speed phase mid-run hits a query and its divisor together and
-    # cancels, instead of skewing one side of a global median.
-    control_gaps: list[list[float]] = []
+    # control reps runs at every query boundary, so each query rep is
+    # bracketed by the gap before and the gap after it. Each rep then
+    # normalizes by its LOCAL bracketing controls — a VM speed phase
+    # mid-run hits a query and its divisor together and cancels,
+    # instead of skewing one side of a global median.
+    gc = GapControl(spark)
     qreps: dict[str, list[float]] = {name: [] for name in HEADLINE}
     qgap: dict[str, list[int]] = {name: [] for name in HEADLINE}
-
-    def run_gap() -> None:
-        gap = []
-        for _ in range(CTRL_PER_GAP):
-            t0 = time.perf_counter()
-            _control(spark)
-            gap.append(round(time.perf_counter() - t0, 4))
-        control_gaps.append(gap)
-
-    run_gap()
+    gc.gap()
     for _ in range(CYCLES):
         for name in HEADLINE:
-            qgap[name].append(len(control_gaps) - 1)
+            qgap[name].append(gc.gap_index())
             t0 = time.perf_counter()
             _drain(reg[name].run(spark, sf_dir))
             qreps[name].append(round(time.perf_counter() - t0, 4))
-            run_gap()
-
-    def trimmed(xs: list[float], frac: float = TRIM_FRAC) -> list[float]:
-        s = sorted(xs)
-        k = int(len(s) * frac)
-        return s[k:len(s) - k] or s
+            gc.gap()
 
     timings = {name: round(statistics.median(reps), 4)
                for name, reps in qreps.items()}
@@ -190,34 +252,21 @@ def main() -> None:
     # cross-round tables need the min series too (medians read ~5-10%
     # higher than mins by construction, not by regression)
     timings_min = {name: min(reps) for name, reps in qreps.items()}
-    control_reps = [t for gap in control_gaps for t in gap]
-    ctl_core = trimmed(control_reps)
-    ctl_median = statistics.median(ctl_core)
-    ctl_mean = statistics.fmean(ctl_core)
-    ctl_cv = (statistics.pstdev(ctl_core) / ctl_mean
-              if ctl_mean else 0.0)
-    raw_mean = statistics.fmean(control_reps)
-    ctl_cv_raw = (statistics.pstdev(control_reps) / raw_mean
-                  if raw_mean else 0.0)
-    vs_ref = ctl_median / CONTROL_REF_S
+    control_reps = [t for gap in gc.gaps for t in gap]
+    stamp = gc.stamp()
 
-    # Per-rep local normalization: rep / (median of its 4 bracketing
-    # control reps / ref_s); per-query value = median across cycles.
-    normalized: dict[str, float] = {}
-    for name in HEADLINE:
-        norm_reps = []
-        for rep, g in zip(qreps[name], qgap[name]):
-            local = control_gaps[g] + control_gaps[g + 1]
-            local_vs = statistics.median(local) / CONTROL_REF_S
-            norm_reps.append(rep / local_vs if local_vs else rep)
-        normalized[name] = round(statistics.median(norm_reps), 4)
+    # Per-rep local normalization: rep / local speed factor of its two
+    # bracketing gaps; per-query value = median across cycles.
+    normalized = {
+        name: round(statistics.median(
+            rep / gc.local_vs_ref(g)
+            for rep, g in zip(qreps[name], qgap[name])), 4)
+        for name in HEADLINE}
 
-    # Ingest bench: fixed-width text → snappy Avro (BASELINE.md shape).
+    # Ingest legs: fixed-width text → snappy Avro (BASELINE.md shape).
     ingest_rates: dict = {}
     try:
-        from shredder_spark.sources.ingest_bench import bench_ingest
-
-        ingest = bench_ingest(spark, sf_dir)
+        ingest = _bench_ingest(spark)
         timings.update(ingest["timings"])
         ingest_rates = ingest["ingest"]
     except Exception as e:  # never fail the whole bench on the ingest leg
@@ -230,16 +279,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "control": {
-            "reps": control_reps,
-            "gaps": control_gaps,
-            "median": round(ctl_median, 4),
-            "cv": round(ctl_cv, 4),
-            "cv_raw": round(ctl_cv_raw, 4),
-            "trim_frac": TRIM_FRAC,
-            "ref_s": CONTROL_REF_S,
-            "vs_ref": round(vs_ref, 4),
-        },
+        "control": {"reps": control_reps, "gaps": gc.gaps, **stamp},
         # headline reps at reference VM speed, each rep divided by the
         # speed factor of its own bracketing controls (median over
         # cycles). Compare THESE across rounds; raw medians conflate
@@ -251,8 +291,8 @@ def main() -> None:
                    "reps), per-rep local normalization, {t:.0%}-trimmed "
                    "control stamp, median of {c} reps; control frozen "
                    "at ref_s={r}s (round 6)").format(
-                       g=CTRL_PER_GAP, n=len(control_reps),
-                       t=TRIM_FRAC, c=CYCLES, r=CONTROL_REF_S),
+                       g=gc.per_gap, n=len(control_reps),
+                       t=gc.trim_frac, c=CYCLES, r=stamp["ref_s"]),
     }
     if ingest_rates:
         out["ingest"] = ingest_rates
@@ -296,8 +336,8 @@ def main() -> None:
         "unit": "sec",
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "sf": out["sf"],
-        "control": {"median": round(ctl_median, 3),
-                    "vs_ref": round(vs_ref, 3)},
+        "control": {"median": round(stamp["median"], 3),
+                    "vs_ref": round(stamp["vs_ref"], 3)},
         "full": full_path,
     }
     line = json.dumps(compact)

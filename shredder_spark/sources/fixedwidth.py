@@ -37,8 +37,14 @@ _RAW_COL = "_raw_line"
 
 # Timestamp text format `yyyy-MM-dd-HH.mm.ss[.ffffff]`
 # (`fixed2avro/ColumnBuilder.go:232,283` comments). Seconds part is
-# fixed-width; the fraction is 0-9 digits, right-padded to micros.
-_TS_SECONDS_FMT = "yyyy-MM-dd-HH.mm.ss"
+# fixed-width; the fraction is up to 6 digits, right-padded to micros.
+# The accepted shape of a left-trimmed value's first 26 characters:
+# every component all digits at full width, separators unchecked (any
+# character, `(?s)`), then an optional fraction that is a digit prefix
+# followed only by pad spaces; `\z` is the true end (`$` would allow a
+# trailing line terminator).
+_TS_SHAPE = (r"(?s)^[0-9]{4}.[0-9]{2}.[0-9]{2}.[0-9]{2}.[0-9]{2}.[0-9]{2}"
+             r"(.[0-9]* *)?\z")
 
 
 def _ts_micros_expr(raw: Column) -> Column:
@@ -49,10 +55,15 @@ def _ts_micros_expr(raw: Column) -> Column:
     `[0:4] [5:7] [8:10] [11:13] [14:16] [17:19] [20:]`) — then rebuilds
     with ``try_make_timestamp`` (≈30% faster than a DateTimeFormatter
     round through ``try_to_timestamp``, and, like the reference, does
-    not re-validate the separator runes). The fraction (0–6+ digits) is
-    right-padded to micros; any non-numeric component nulls the value.
+    not re-validate the separator runes). The rules are the numpy
+    reader's (``fixedwidth_arrow._ts_micros_numpy``): leading spaces
+    are trimmed, only the first 26 characters count, and a value that
+    does not have ``_TS_SHAPE`` is null — so a sign, a space inside a
+    component, a component cut short or a fraction digit after a space
+    nulls it instead of try_cast reading it. The fraction is
+    right-padded to micros.
     """
-    t = F.trim(raw)
+    t = F.substring(F.ltrim(raw), 1, 26)
     whole = F.try_make_timestamp(
         F.substring(t, 1, 4).try_cast("int"),
         F.substring(t, 6, 2).try_cast("int"),
@@ -63,12 +74,10 @@ def _ts_micros_expr(raw: Column) -> Column:
     )
     # fraction re-attached as integer micros: long add beats routing a
     # decimal(8,6) seconds value through make_timestamp (~25% on the
-    # 3-ts-column bench shape). Absent fraction → 0; garbage → null,
-    # which nulls the timestamp (same as the old decimal-concat path).
-    frac_raw = F.substring(t, 21, 6)
-    frac = F.when(frac_raw == "", F.lit(0)).otherwise(
-        F.rpad(frac_raw, 6, "0").try_cast("long"))
-    return F.timestamp_micros(F.unix_micros(whole) + frac)
+    # 3-ts-column bench shape). An absent fraction pads to 0.
+    frac = F.rpad(F.rtrim(F.substring(t, 21, 6)), 6, "0").try_cast("long")
+    return F.when(t.rlike(_TS_SHAPE),
+                  F.timestamp_micros(F.unix_micros(whole) + frac))
 
 
 def _slice_expr(value: Column, start: int, length: int) -> Column:

@@ -61,6 +61,7 @@ from pyspark.sql.types import StructType
 
 from shredder_spark.avro_schema import FixedSchema, parse_avro_fixed_schema
 from shredder_spark.sources.fixedwidth import FOOTER_PREFIX
+from shredder_spark.utils import ensure_package_on_executors
 
 _BATCH_ROWS = 65536  # rows per Arrow batch
 _FOOTER = FOOTER_PREFIX.encode()
@@ -465,6 +466,8 @@ class FixedWidthArrowReader(DataSourceReader):
 
 
 def register_fixedwidth_source(spark: SparkSession) -> None:
+    # the reader is pickled by reference: workers must import the package
+    ensure_package_on_executors(spark)
     spark.dataSource.register(FixedWidthDataSource)
 
 

@@ -174,6 +174,11 @@ TS_CASES = [
     ("  1995-06-15-10.30.00", False),
     ("", False),                          # all-space field
     ("not-a-ts-aa.bb.cc", False),
+    ("+995-06-15-10.30.00", False),       # a sign is not a digit
+    ("1995- 6-15-10.30.00", False),       # a space inside a component
+    ("1995-06-15-10.30.0", False),        # seconds cut short at 19 bytes
+    ("1995-06-15-10.30.00. 5", False),    # a fraction after a space
+    ("1995-06-15-10.30.00.12    X", True),  # past offset 26: ignored
 ]
 TS_LENS = (19, 20, 26, 30)
 
@@ -240,7 +245,9 @@ def test_ts_adversarial_feed_equals_expression_tier(spark, tmp_path):
     assert got[11].t26.minute == 31 and got[11].t26.second == 0
     assert got[16].t30 == got[1].t30             # leading space trimmed
     assert all(got[i].t26 is None
-               for i in (6, 7, 8, 9, 10, 13, 14, 15, 18, 19))
+               for i in (6, 7, 8, 9, 10, 13, 14, 15, 18, 19,
+                         20, 21, 22, 23))
+    assert got[24].t30.microsecond == 120000     # not 12 µs
 
 
 # ------------------------------------------------------ mapped reads
