@@ -64,7 +64,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from shredder_spark import queries as queries_mod
-from shredder_spark.session import get_spark
+from shredder_spark.session import default_cpus, get_spark
 
 HEADLINE = [
     "q01_scan_count",
@@ -310,7 +310,7 @@ def main() -> None:
     round_tag = os.environ.get("BENCH_ROUND", ROUND_TAG)
     # a non-default sf (smoke run) must not clobber the committed
     # sf0.1 artifact — divert it unless BENCH_FULL_OUT says otherwise
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = str(default_cpus())
     here = os.path.dirname(os.path.abspath(__file__))
     default_full = (_default_full_name(here, round_tag, cpus)
                     if sf == "0.1"

@@ -4,8 +4,7 @@ Re-expresses the semantics of the reference's schema loader
 (`/root/reference/common/fixed.go:86-148`): an Avro record schema whose
 fields carry a rune-width ``len`` attribute describing a fixed-column
 text layout. Here it compiles to a Spark ``StructType`` (widths kept in
-field metadata) plus the column-expression builders the fixed-width
-source uses.
+field metadata) and the field widths the fixed-width parse slices by.
 
 Type surface per SURVEY.md §1.3 (`/root/reference/common/avro.go:38-56`):
 boolean, Bytes (capital-B quirk), float, double, int, long, string,
@@ -67,10 +66,6 @@ class FixedField:
 class FixedSchema:
     name: str
     fields: tuple[FixedField, ...]
-    # schema-declared text encoding: "ascii" marks a single-byte feed
-    # (the reference's mainframe-extract shape), letting the source
-    # skip rune-offset slicing; None/"utf8" = rune-correct default.
-    encoding: str | None = None
 
     @property
     def row_width(self) -> int:
@@ -91,17 +86,6 @@ class FixedSchema:
                 for f in self.fields
             ]
         )
-
-    def field_offsets(self) -> list[tuple[FixedField, int]]:
-        """1-based character start position per field (Spark's
-        ``substring`` is 1-based and character-counted, which makes it
-        rune-correct for multibyte input — parity with
-        `fixed2avro/Util.go:45-65` without byte bookkeeping)."""
-        out, pos = [], 1
-        for f in self.fields:
-            out.append((f, pos))
-            pos += f.length
-        return out
 
 
 def parse_avro_fixed_schema(schema_json: str | dict) -> FixedSchema:
@@ -133,5 +117,4 @@ def parse_avro_fixed_schema(schema_json: str | dict) -> FixedSchema:
         fields.append(FixedField(name, type_name, int(length)))
     if not fields:
         raise ValueError("schema has no fields")
-    return FixedSchema(obj.get("name", "record"), tuple(fields),
-                       obj.get("encoding"))
+    return FixedSchema(obj.get("name", "record"), tuple(fields))

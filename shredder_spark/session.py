@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may
+    run on: the core count every session, reader and kernel defaults
+    to."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "shredder-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
@@ -27,7 +35,7 @@ def get_spark(app_name: str = "shredder-spark", cpus: int | None = None) -> Spar
       columnar batches, not pickled rows.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -400,7 +400,7 @@ def fixed_width_to_avro_fused(
     schema,
     out_dir: str,
     *,
-    tasks: int = 32,
+    tasks: int | None = None,
 ) -> int:
     """Reference-shaped single-stage ingest: each task streams its byte
     ranges through the fixed-width reader's public pair —
@@ -412,13 +412,14 @@ def fixed_width_to_avro_fused(
     for; everything upstream/downstream of ingest stays DataFrame.
 
     Returns total rows written. Output files match
-    ``write_avro_ocf``'s schema (nullable unions) and naming. Like
-    ``format("fixedwidth")``, raises on non-ASCII input.
+    ``write_avro_ocf``'s schema (nullable unions) and naming. ``tasks``
+    defaults to ``session.default_cpus()``.
     """
     import os
 
     from shredder_spark.avro_schema import FixedSchema, \
         parse_avro_fixed_schema
+    from shredder_spark.session import default_cpus
     from shredder_spark.sinks.avro import spark_schema_to_avro
     from shredder_spark.sources.fixedwidth_arrow import FixedWidthArrowReader
     from shredder_spark.utils import ensure_package_on_executors
@@ -427,6 +428,7 @@ def fixed_width_to_avro_fused(
         else parse_avro_fixed_schema(schema)
     avro_schema = spark_schema_to_avro(fs.to_struct_type())
 
+    tasks = tasks or default_cpus()
     ensure_package_on_executors(spark)
     os.makedirs(out_dir, exist_ok=True)
     planner = FixedWidthArrowReader(

@@ -1,45 +1,37 @@
-"""Vectorized fixed-width reader: ``spark.read.format("fixedwidth")``.
+"""The fixed-width parse kernel and ``spark.read.format("fixedwidth")``.
 
-The declared-ASCII fast path of the fixed-width source. Each input
-partition is a byte range of the feed, read directly in the
-executor's Python worker from a read-only ``mmap`` of the file: the
-owned-line boundaries are found on the mapping, the ASCII check is one
-``max()`` over it, and when every row has the declared width and a
-CRLF terminator the range becomes an ``n × width`` byte matrix by
-reshaping the mapping in place — no private copy of the range (a
-ragged range is copied out and line-split instead). Column slices are
-views, each column is parsed in one vectorized pass, and every array a
-batch holds is a private copy, so no batch outlives the mapping:
+One parse serves every fixed-width entry point. ``_parse_batch`` parses
+an ``n × width`` byte matrix, which ASCII lines of the declared width
+already are; ``parse_lines`` slices any other batch by rune (parity
+with `fixed2avro/Util.go:45-65`): string and bytes fields are rune
+slices of the line, and typed fields are parsed from a matrix of one
+byte per rune, in which a non-ASCII rune reads as DEL, a byte no parser
+accepts. Each column is parsed in one vectorized pass:
 
-- numerics: the field as an Arrow string column → ``ascii_trim`` +
-  ``cast``; a batch Arrow rejects drops to a numpy parse whose bad or
-  out-of-range values become NULL (the ``try_cast`` contract);
+- numerics: Arrow's ``ascii_trim`` + ``cast``; a batch Arrow rejects
+  drops to a numpy parse whose bad or out-of-range values become NULL;
 - the custom ``yyyy-MM-dd-HH.mm.ss[.ffffff]`` timestamps get ISO
   separators written over a copy of the field and go through Arrow's
-  ISO-8601 ``cast``, which accepts only strictly valid times; a batch
-  it rejects drops to the numpy parse (components sliced at fixed
-  offsets, days-from-civil, no per-row formatter), which defines the
-  semantics.
+  strict ISO-8601 ``cast``; a batch it rejects drops to the numpy
+  parse (components sliced at fixed offsets, days-from-civil), which
+  defines the semantics.
 
-Typed Arrow batches cross the Python↔JVM boundary once.
+Masked arrays are built from buffers: ``pa.array`` imports pandas.
+
+``format("fixedwidth")`` reads each input partition, a byte range of
+the feed, in the executor's Python worker from a read-only ``mmap``.
+ASCII rows of the declared width with CRLF terminators reshape the
+mapping in place into the byte matrix; any other range is copied out
+and split into lines for ``parse_lines``. No batch aliases the mapping,
+and typed batches cross the Python↔JVM boundary once.
 ``sinks/avro_vec.fixed_width_to_avro_fused`` runs the same
 ``partitions()`` / ``read(part)`` pair per task and never crosses it.
 A file found shorter at ``read(part)`` than when the partitions were
 planned raises instead of reading past its end.
 
-ASCII contract: the reader slices bytes, so it accepts only ASCII
-input and raises on any range holding a non-ASCII byte. Feeds needing
-rune-correct slicing, quarantine or streaming use the expression tier,
-``sources/fixedwidth.read_fixed_width``; on ASCII feeds both tiers
-produce the same rows (tests/test_fixedwidth_arrow.py).
-
 Split convention (HDFS text splits): each partition owns every line
 that STARTS inside its byte range; a line starting with the footer
 prefix ends the range's scan (`ColumnBuilder.go:211-214`).
-
-Reference parity: same A6-A21 surface as sources/fixedwidth.py
-(`fixed2avro/ColumnBuilder.go:98-227` field loop, reimplemented as
-columnar batch ops).
 """
 
 from __future__ import annotations
@@ -60,11 +52,45 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from shredder_spark.avro_schema import FixedSchema, parse_avro_fixed_schema
-from shredder_spark.sources.fixedwidth import FOOTER_PREFIX
+from shredder_spark.session import default_cpus
 from shredder_spark.utils import ensure_package_on_executors
 
+# a line starting with 12 `*` terminates the input (`ColumnBuilder.go:211-214`)
+FOOTER_PREFIX = "*" * 12
 _BATCH_ROWS = 65536  # rows per Arrow batch
 _FOOTER = FOOTER_PREFIX.encode()
+_DEL = 0x7F  # stands in for a non-ASCII rune in a typed field
+
+
+def _masked(pa_type, n: int, values: np.ndarray,
+            mask: np.ndarray | None) -> pa.Array:
+    """An ``n``-row array over the ``values`` buffer, NULL where
+    ``mask`` is set (pa.array(..., mask=) would import pandas)."""
+    nulls = 0 if mask is None else int(np.count_nonzero(mask))
+    validity = (pa.py_buffer(np.packbits(~mask, bitorder="little"))
+                if nulls else None)
+    return pa.Array.from_buffers(
+        pa_type, n, [validity, pa.py_buffer(np.ascontiguousarray(values))],
+        nulls)
+
+
+def _null_mask(arr: pa.Array) -> np.ndarray:
+    """``arr.is_null()`` as numpy, read off the validity bitmap."""
+    n = len(arr)
+    if arr.null_count == 0:
+        return np.zeros(n, dtype=bool)
+    bits = np.unpackbits(np.frombuffer(arr.buffers()[0], np.uint8),
+                         count=arr.offset + n, bitorder="little")
+    return bits[arr.offset:] == 0
+
+
+def _string_list(values: list[str]) -> pa.Array:
+    """``pa.array(values)`` without its pandas import."""
+    blobs = [v.encode() for v in values]
+    offsets = np.zeros(len(blobs) + 1, dtype=np.int32)
+    np.cumsum([len(b) for b in blobs], out=offsets[1:])
+    return pa.StringArray.from_buffers(
+        len(blobs), pa.py_buffer(offsets), pa.py_buffer(b"".join(blobs)))
 
 
 def _string_array(mat: np.ndarray, start: int, length: int) -> pa.Array:
@@ -81,7 +107,7 @@ def _string_array(mat: np.ndarray, start: int, length: int) -> pa.Array:
 
 def _num_fallback(raw: np.ndarray, dtype):
     """Per-element tolerant parse for a batch where vectorized astype
-    failed: bad or out-of-range field → null (the try_cast contract)."""
+    failed: bad or out-of-range field → null."""
     out = np.zeros(len(raw), dtype=dtype)
     mask = np.zeros(len(raw), dtype=bool)
     py = int if np.issubdtype(dtype, np.integer) else float
@@ -121,7 +147,7 @@ def _num_array(mat: np.ndarray, start: int, length: int, dtype,
         out = (vals < info.min) | (vals > info.max)
         mask = out if mask is None else mask | out
         vals = vals.astype(dtype)
-    return pa.array(vals, type=pa_type, mask=mask)
+    return _masked(pa_type, len(vals), vals, mask)
 
 
 def _days_from_civil(y: np.ndarray, m: np.ndarray,
@@ -201,10 +227,9 @@ def _ts_micros_arrow(mat: np.ndarray, start: int, length: int) -> pa.Array:
 
 
 def _ts_micros_numpy(mat: np.ndarray, start: int, length: int) -> pa.Array:
-    """The timestamp semantics, equal to the expression tier's
-    ``fixedwidth._ts_micros_expr`` on ASCII fields: leading spaces are
-    trimmed; components are sliced at fixed offsets (separators not
-    re-validated, reference parity) and must be digits forming a valid
+    """The timestamp semantics: leading spaces are trimmed; components
+    are sliced at fixed offsets (separators not re-validated,
+    reference parity) and must be digits forming a valid
     calendar date and time — hour ≤ 23, minute ≤ 59, second ≤ 60 (60
     rolls into the next minute); the fraction is a digit prefix
     right-padded to micros, then pad spaces; anything else → null."""
@@ -233,12 +258,11 @@ def _ts_micros_numpy(mat: np.ndarray, start: int, length: int) -> pa.Array:
     y, mo, d = comps[:, 0], comps[:, 1], comps[:, 2]
     hh, mi, ss = comps[:, 3], comps[:, 4], comps[:, 5]
     # fraction: a DIGIT PREFIX right-padded to micros, then field pad
-    # spaces (the expression tier trims the value before rpad'ing the
-    # fraction with zeros — '.5    ' means 500000 µs). Digits after a
-    # space, or any other char, → bad (nulls the timestamp, same as
-    # try_cast on the padded fraction). Weight of fraction digit i is
-    # 10^(5-i) regardless of how many digits follow — algebraically
-    # identical to the old prefix-value × 10^(6-nd) form.
+    # spaces (the value is trimmed before the fraction is rpad'ed with
+    # zeros — '.5    ' means 500000 µs). Digits after a space, or any
+    # other char, → bad (nulls the timestamp). Weight of fraction digit
+    # i is 10^(5-i) regardless of how many digits follow —
+    # algebraically identical to the old prefix-value × 10^(6-nd) form.
     frac = np.zeros(n, dtype=np.int64)
     fbad = np.zeros(n, dtype=bool)
     fw = min(6, max(0, length - 20))
@@ -260,13 +284,23 @@ def _ts_micros_numpy(mat: np.ndarray, start: int, length: int) -> pa.Array:
     days = _days_from_civil(safe(y, 1970), safe(mo, 1), safe(d, 1))
     micros = (((days * 24 + safe(hh, 0)) * 60 + safe(mi, 0)) * 60
               + safe(ss, 0)) * 1_000_000 + frac
-    return pa.array(micros, type=pa.timestamp("us"), mask=bad)
+    return _masked(pa.timestamp("us"), n, micros, bad)
+
+
+def _date_array(ts: pa.Array) -> pa.Array:
+    """Timestamps → dates (floor to the UTC day), validity kept."""
+    validity, values = ts.buffers()
+    micros = np.frombuffer(values, np.int64, ts.offset + len(ts))
+    days = (micros // 86_400_000_000).astype(np.int32)
+    return pa.Array.from_buffers(pa.date32(), len(ts),
+                                 [validity, pa.py_buffer(days)],
+                                 ts.null_count, ts.offset)
 
 
 def _bool_array(mat: np.ndarray, start: int, length: int) -> pa.Array:
-    """First non-space char: J/Y → true, N → false, else null
-    (fixedwidth._cast_expr boolean parity; fields are 1-char in
-    practice, ltrim handled by taking the first non-space)."""
+    """First non-space char: J/Y → true, N → false (either case), else
+    null (fields are 1-char in practice, ltrim handled by taking the
+    first non-space)."""
     sl = mat[:, start:start + length].view(np.uint8)
     first = sl[:, 0].copy()
     for i in range(1, sl.shape[1]):  # ltrim across the (tiny) width
@@ -276,51 +310,119 @@ def _bool_array(mat: np.ndarray, start: int, length: int) -> pa.Array:
                   first - 32, first)
     t = (up == ord("J")) | (up == ord("Y"))
     f = up == ord("N")
-    return pa.array(t, type=pa.bool_(), mask=~(t | f))
+    return _masked(pa.bool_(), len(t), np.packbits(t, bitorder="little"),
+                   ~(t | f))
 
 
-def _parse_batch(mat: np.ndarray, fs: FixedSchema) -> pa.RecordBatch:
+_TEXT_TYPES = ("string", "bytes", "Bytes")
+_NUMERIC = {"int": (np.int32, pa.int32()), "long": (np.int64, pa.int64()),
+            "float": (np.float32, pa.float32()),
+            "double": (np.float64, pa.float64())}
+
+
+def _parse_batch(mat: np.ndarray, fs: FixedSchema,
+                 lines: pa.Array | None = None) -> pa.RecordBatch:
+    """Typed columns from the ``n × row_width`` byte matrix ``mat``.
+    Given the batch's ``lines``, string and bytes fields are their rune
+    slices instead, as the line holds them (a short line gives a short
+    value)."""
     cols, pos = [], 0
     for f in fs.fields:
         t = f.type_name
-        if t == "string":
-            cols.append(_string_array(mat, pos, f.length))
-        elif t in ("bytes", "Bytes"):
-            blob = np.ascontiguousarray(mat[:, pos:pos + f.length])
-            n = mat.shape[0]
-            offsets = np.arange(0, (n + 1) * f.length, f.length,
-                                dtype=np.int32)
-            cols.append(pa.BinaryArray.from_buffers(
-                pa.binary(), n, [None, pa.py_buffer(offsets.tobytes()),
-                                 pa.py_buffer(blob.tobytes())]))
-        elif t in ("int",):
-            cols.append(_num_array(mat, pos, f.length, np.int32,
-                                   pa.int32()))
-        elif t == "long":
-            cols.append(_num_array(mat, pos, f.length, np.int64,
-                                   pa.int64()))
-        elif t == "float":
-            cols.append(_num_array(mat, pos, f.length, np.float32,
-                                   pa.float32()))
-        elif t == "double":
-            cols.append(_num_array(mat, pos, f.length, np.float64,
-                                   pa.float64()))
+        if t in _TEXT_TYPES:
+            col = (_string_array(mat, pos, f.length) if lines is None
+                   else pc.utf8_slice_codeunits(lines, pos, pos + f.length))
+            cols.append(col if t == "string" else col.cast(pa.binary()))
+        elif t in _NUMERIC:
+            cols.append(_num_array(mat, pos, f.length, *_NUMERIC[t]))
         elif t == "boolean":
             cols.append(_bool_array(mat, pos, f.length))
-        elif t in ("timestamp-millis", "timestamp-micros"):
-            cols.append(_ts_micros(mat, pos, f.length))
         elif t == "date":
-            ts = _ts_micros(mat, pos, f.length)
-            days = pa.compute.cast(
-                pa.compute.floor(pa.compute.divide(
-                    pa.compute.cast(ts, pa.int64()), 86_400_000_000)),
-                pa.int32())
-            cols.append(days.cast(pa.date32()))
-        else:  # pragma: no cover
-            raise ValueError(f"unsupported type {t!r}")
+            cols.append(_date_array(_ts_micros(mat, pos, f.length)))
+        else:  # timestamp-millis, timestamp-micros
+            cols.append(_ts_micros(mat, pos, f.length))
         pos += f.length
-    names = [f.name for f in fs.fields]
-    return pa.RecordBatch.from_arrays(cols, names=names)
+    return pa.RecordBatch.from_arrays(cols, names=[f.name for f in fs.fields])
+
+
+def _line_buffers(lines: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """The UTF-8 bytes of a string array's lines, back to back, and the
+    ``n + 1`` offsets of the lines in them (starting at 0)."""
+    n = len(lines)
+    _, off_buf, data_buf = lines.buffers()
+    dtype = np.int64 if pa.types.is_large_string(lines.type) else np.int32
+    offsets = np.frombuffer(off_buf, dtype, n + 1,
+                            lines.offset * np.dtype(dtype).itemsize)
+    offsets = offsets.astype(np.int64)
+    lo, hi = offsets[0], offsets[-1]
+    data = (np.frombuffer(data_buf, np.uint8, hi - lo, lo) if hi > lo
+            else np.empty(0, dtype=np.uint8))
+    return data, offsets - lo
+
+
+def parse_lines(lines: pa.Array, fs: FixedSchema, *,
+                quarantine: bool = False) -> pa.RecordBatch:
+    """Parse one batch of fixed-width lines (terminators removed) into
+    the schema's typed columns.
+
+    ASCII lines all ``row_width`` long are reshaped into the byte
+    matrix as they are. Any other batch is sliced by rune: a line of
+    the wrong width is cut or space-padded to ``row_width`` runes for
+    the typed fields, while its string and bytes fields keep their rune
+    slices as they are.
+
+    ``quarantine=True`` adds ``_raw_line`` (the line) and ``_errors``:
+    ``row_width:<runes>`` for a line of the wrong width, else
+    ``bad_<field>`` for each typed field that is not all spaces and
+    parses to NULL (reference B8, instead of silent zero values).
+    """
+    w = fs.row_width
+    n = len(lines)
+    data, offsets = _line_buffers(lines)
+    runes = np.diff(offsets)
+    if (runes == w).all() and (data.size == 0 or data.max() < 0x80):
+        mat = data.view("S1").reshape(n, w)
+        batch = _parse_batch(mat, fs)
+    else:
+        cont = np.flatnonzero((data & 0xC0) == 0x80)  # UTF-8 tails
+        runes = runes - np.bincount(
+            np.searchsorted(offsets, cont, side="right") - 1, minlength=n)
+        one = np.delete(data, cont)  # one byte per rune
+        one[one >= 0x80] = _DEL
+        if (runes == w).all():
+            mat = one.view("S1").reshape(n, w)
+        else:
+            rune_offsets = np.zeros(n + 1, dtype=np.int32)
+            np.cumsum(runes, out=rune_offsets[1:])
+            text = pa.StringArray.from_buffers(
+                n, pa.py_buffer(rune_offsets), pa.py_buffer(one))
+            fitted = pc.utf8_rpad(pc.utf8_slice_codeunits(text, 0, w), w)
+            mat = _line_buffers(fitted)[0].view("S1").reshape(n, w)
+        batch = _parse_batch(mat, fs, lines)
+    if not quarantine:
+        return batch
+
+    width_ok = runes == w
+    flags, reasons, pos = [~width_ok], ["row_width:"], 0
+    for f, col in zip(fs.fields, batch.columns):
+        if f.type_name not in _TEXT_TYPES:
+            blank = (mat[:, pos:pos + f.length].view(np.uint8)
+                     == ord(" ")).all(axis=1)
+            flags.append(width_ok & _null_mask(col) & ~blank)
+            reasons.append(f"bad_{f.name}")
+        pos += f.length
+    flags = np.column_stack(flags)
+    rows, kinds = np.nonzero(flags)  # row-major: a row's reasons in field order
+    errors = [reasons[k] + (str(runes[r]) if k == 0 else "")
+              for r, k in zip(rows.tolist(), kinds.tolist())]
+    list_offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(flags.sum(axis=1), out=list_offsets[1:])
+    return pa.RecordBatch.from_arrays(
+        batch.columns + [lines, pa.ListArray.from_arrays(
+            pa.Array.from_buffers(pa.int32(), n + 1,
+                                  [None, pa.py_buffer(list_offsets)]),
+            _string_list(errors))],
+        names=batch.schema.names + ["_raw_line", "_errors"])
 
 
 def _owned_span(mm: mmap.mmap, start: int, end: int) -> tuple[int, int]:
@@ -346,7 +448,8 @@ class _Range(InputPartition):
 
 class FixedWidthDataSource(DataSource):
     """``format("fixedwidth")`` — options: ``path``, ``fixed_schema``
-    (Avro+len JSON) and ``cores`` (input partitions, default 8)."""
+    (Avro+len JSON) and ``cores`` (input partitions, default
+    ``session.default_cpus()``)."""
 
     @classmethod
     def name(cls) -> str:
@@ -366,7 +469,7 @@ class FixedWidthArrowReader(DataSourceReader):
     def __init__(self, options: dict, fixed: FixedSchema):
         path = options["path"]
         self.fixed = fixed
-        self.cores = int(options.get("cores", "8"))
+        self.cores = int(options.get("cores") or default_cpus())
         if os.path.isdir(path):
             # Spark text-source directory convention: every data file
             # (skip _SUCCESS/_manifest dotfiles)
@@ -390,49 +493,44 @@ class FixedWidthArrowReader(DataSourceReader):
                 parts.append(_Range(f, s, min(s + chunk, size)))
         return parts
 
-    def _matrix(self, mm: mmap.mmap, a: int, b: int) -> np.ndarray:
-        """The owned lines ``mm[a:b]`` → n×width matrix. Fast path:
-        uniform width+CRLF rows reshape the mapping in place (a
-        read-only view, no copy); otherwise the range is copied out and
-        line-split with space padding (width deviations are data errors
-        that the null-on-failure casts surface)."""
+    def _matrix(self, mm: mmap.mmap, a: int, b: int) -> np.ndarray | None:
+        """The owned lines ``mm[a:b]`` as an n×width byte matrix, up to
+        the first footer line, when they are ASCII, all of the declared
+        width and CRLF-terminated: the mapping reshaped in place (a
+        read-only view, no copy). None for any other range."""
         w = self.fixed.row_width
         w2 = w + 2
-        if a < b and (b - a) % w2 == 0:
-            mat = np.frombuffer(mm, dtype="S1", count=b - a,
-                                offset=a).reshape(-1, w2)
-            crlf = mat[:, w:].view(np.uint8)
-            if (crlf[:, 0] == 13).all() and (crlf[:, 1] == 10).all():
-                mat = mat[:, :w]
-                if len(_FOOTER) <= w:
-                    is_footer = (
-                        mat[:, :len(_FOOTER)].view(np.uint8)
-                        == np.frombuffer(_FOOTER, np.uint8)).all(axis=1)
-                    if is_footer.any():
-                        mat = mat[:int(np.argmax(is_footer))]
-                return mat
-        rows = []
-        for line in mm[a:b].split(b"\n"):
-            line = line.rstrip(b"\r")
-            if not line:
-                continue
-            if line.startswith(_FOOTER):
-                break
-            rows.append(line[:w].ljust(w, b" "))
-        if not rows:
+        if a >= b:
             return np.empty((0, w), dtype="S1")
-        return np.frombuffer(b"".join(rows), dtype="S1").reshape(-1, w)
+        if (b - a) % w2 or np.frombuffer(mm, np.uint8, b - a, a).max() >= 0x80:
+            return None
+        mat = np.frombuffer(mm, dtype="S1", count=b - a,
+                            offset=a).reshape(-1, w2)
+        crlf = mat[:, w:].view(np.uint8)
+        if not ((crlf[:, 0] == 13).all() and (crlf[:, 1] == 10).all()):
+            return None
+        mat = mat[:, :w]
+        if len(_FOOTER) <= w:
+            is_footer = (mat[:, :len(_FOOTER)].view(np.uint8)
+                         == np.frombuffer(_FOOTER, np.uint8)).all(axis=1)
+            if is_footer.any():
+                mat = mat[:int(np.argmax(is_footer))]
+        return mat
 
-    def _batches(self, mat: np.ndarray):
-        for i in range(0, max(1, mat.shape[0]), _BATCH_ROWS):
-            chunk = mat[i:i + _BATCH_ROWS]
-            if chunk.shape[0] or i == 0:
-                yield _parse_batch(chunk, self.fixed)
+    def _batches(self, mm: mmap.mmap, a: int, b: int):
+        mat = self._matrix(mm, a, b)
+        if mat is not None:
+            for i in range(0, max(1, mat.shape[0]), _BATCH_ROWS):
+                yield _parse_batch(mat[i:i + _BATCH_ROWS], self.fixed)
+            return
+        lines = _split_lines(np.frombuffer(mm[a:b], np.uint8))
+        for i in range(0, max(1, len(lines)), _BATCH_ROWS):
+            yield parse_lines(lines.slice(i, _BATCH_ROWS), self.fixed)
 
     def read(self, part: _Range):
         if part.start >= part.end:  # an empty input's single range
-            yield from self._batches(
-                np.empty((0, self.fixed.row_width), dtype="S1"))
+            yield _parse_batch(
+                np.empty((0, self.fixed.row_width), dtype="S1"), self.fixed)
             return
         with open(part.path, "rb") as fh:
             size = os.fstat(fh.fileno()).st_size
@@ -445,16 +543,7 @@ class FixedWidthArrowReader(DataSourceReader):
                     "read was planned: the file changed under the scan")
             mm = mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ)
         try:
-            a, b = _owned_span(mm, part.start, part.end)
-            if a < b and np.frombuffer(mm, np.uint8, b - a, a).max() >= 0x80:
-                # byte slicing would shift every field after a multibyte
-                # rune and emit invalid UTF-8 strings without an error
-                raise ValueError(
-                    f"{part.path} [{part.start}, {part.end}): non-ASCII "
-                    "bytes; format('fixedwidth') slices bytes — read this "
-                    "feed with sources.fixedwidth.read_fixed_width, which "
-                    "slices runes")
-            yield from self._batches(self._matrix(mm, a, b))
+            yield from self._batches(mm, *_owned_span(mm, part.start, part.end))
         finally:
             try:
                 mm.close()
@@ -463,6 +552,40 @@ class FixedWidthArrowReader(DataSourceReader):
                 # still holds a view of the mapping, which is unmapped
                 # once that view is freed (batches never alias it)
                 pass
+
+
+def _split_lines(buf: np.ndarray) -> pa.Array:
+    """The lines of ``buf`` as a string array: split at LF, trailing CRs
+    dropped, blank lines skipped, and nothing from the first footer
+    line on. Raises on bytes that are not UTF-8."""
+    nl = np.flatnonzero(buf == 0x0A)
+    starts = np.concatenate(([0], nl + 1))
+    ends = np.concatenate((nl, [len(buf)]))
+    while True:  # rstrip(b"\r")
+        cr = ends > starts
+        cr[cr] = buf[ends[cr] - 1] == 0x0D
+        if not cr.any():
+            break
+        ends -= cr
+    keep = ends > starts
+    starts, ends = starts[keep], ends[keep]
+    k = len(_FOOTER)
+    head = buf[np.minimum(starts[:, None] + np.arange(k), len(buf) - 1)]
+    is_footer = ((ends - starts >= k)
+                 & (head == np.frombuffer(_FOOTER, np.uint8)).all(axis=1))
+    if is_footer.any():
+        stop = int(np.argmax(is_footer))
+        starts, ends = starts[:stop], ends[:stop]
+    inside = np.zeros(len(buf) + 1, dtype=np.int8)
+    inside[starts] = 1
+    inside[ends] -= 1
+    offsets = np.zeros(len(starts) + 1, dtype=np.int32)
+    np.cumsum(ends - starts, out=offsets[1:])
+    lines = pa.StringArray.from_buffers(
+        len(starts), pa.py_buffer(offsets),
+        pa.py_buffer(buf[np.cumsum(inside[:-1], dtype=np.int8) > 0]))
+    lines.validate(full=True)
+    return lines
 
 
 def register_fixedwidth_source(spark: SparkSession) -> None:

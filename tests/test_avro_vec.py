@@ -198,13 +198,14 @@ def test_wire_batch_temporals():
 
 def test_fused_fixed_width_to_avro(spark, tmp_path):
     """End-to-end: fixed-width feed → fused job → OCF files that decode
-    to exactly what the expression-tier read + row sink would produce."""
+    to exactly what the expression reference's read + row sink would
+    produce."""
     from shredder_spark.sinks.avro import read_avro_ocf, write_avro_ocf
     from shredder_spark.sinks.avro_vec import fixed_width_to_avro_fused
-    from shredder_spark.sources.fixedwidth import read_fixed_width
+    from tests.fixedwidth_reference import read_fixed_width_reference
 
     schema = {
-        "type": "record", "name": "r", "encoding": "ascii",
+        "type": "record", "name": "r",
         "fields": [
             {"name": "k", "type": "long", "len": 6},
             {"name": "v", "type": "double", "len": 10},
@@ -228,7 +229,7 @@ def test_fused_fixed_width_to_avro(spark, tmp_path):
     assert n == 500
 
     out_row = str(tmp_path / "rowpath")
-    df = read_fixed_width(spark, str(feed), schema)
+    df = read_fixed_width_reference(spark, str(feed), schema)
     write_avro_ocf(df, out_row, codec="snappy")
 
     got = read_avro_ocf(spark, out_fused)
@@ -271,15 +272,27 @@ def test_fused_kernel_bytes_equal_single_thread_replay(spark, tmp_path):
             assert fh.read() == buf.getvalue(), f"range {i}"
 
 
-def test_fused_kernel_rejects_non_ascii(spark, tmp_path):
+def test_fused_kernel_on_unicode_feed(spark, tmp_path):
+    """Multibyte runes in the string columns: the fused kernel slices by
+    rune, and Spark's Avro reader decodes its output to the generator's
+    checksums in every column."""
+    from perfbench import gen
+    from shredder_spark.sinks.avro import AVRO_FORMAT
     from shredder_spark.sinks.avro_vec import fixed_width_to_avro_fused
-    from tests.fixtures import F3_UTF8_SCHEMA, write_f3
 
-    feed = str(tmp_path / "f3.txt")
-    write_f3(feed, rows=10)
-    with pytest.raises(Exception, match="read_fixed_width"):
-        fixed_width_to_avro_fused(spark, feed, F3_UTF8_SCHEMA,
-                                  str(tmp_path / "out"), tasks=2)
+    feed = str(tmp_path / "unicode.txt")
+    truth = gen.write_fixed_width(feed, seed=3, rows=60_000, unicode=True)
+    out = str(tmp_path / "fused")
+    n = fixed_width_to_avro_fused(spark, feed, gen.avro_fixed_schema(), out,
+                                  tasks=3)
+    assert n == truth["rows"]
+    got = (spark.read.format(AVRO_FORMAT).load(out)
+           .selectExpr("count(*) AS `_rows`",
+                       *[gen.checksum_sql(c, t) for c, t, _ in gen.FIELDS])
+           .first().asDict())
+    assert got.pop("_rows") == truth["rows"]
+    assert len(got) == 30
+    assert got == truth["sums"]
 
 
 def test_encode_batch_rows_per_record():

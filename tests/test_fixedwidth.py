@@ -123,64 +123,29 @@ def test_observed_ingest_report(spark, tmp_path):
     assert report.wall_s > 0 and "MB/s" in report.render()
 
 
-def test_ascii_mode_matches_default_on_ascii_input(spark, fixture_dir):
-    """encoding='ascii' byte slicing must agree with the default rune
-    path field-for-field on a pure-ASCII feed (F1)."""
-    a = read_fixed_width(spark, str(fixture_dir / "f1.txt"),
-                         fixtures.F1_WEBLOG_SCHEMA, encoding="ascii")
-    d = read_fixed_width(spark, str(fixture_dir / "f1.txt"),
-                         fixtures.F1_WEBLOG_SCHEMA)
-    assert a.schema == d.schema
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, d.collect()))
+def test_gzipped_input_equals_plain(spark, fixture_dir, tmp_path):
+    """The text source decompresses gzip on the way: a gzipped F1 reads
+    as the same rows as the plain file."""
+    import gzip
+    import shutil
+
+    gz = tmp_path / "f1.txt.gz"
+    with open(fixture_dir / "f1.txt", "rb") as src, gzip.open(gz, "wb") as dst:
+        shutil.copyfileobj(src, dst)
+    plain = read_fixed_width(spark, str(fixture_dir / "f1.txt"),
+                             fixtures.F1_WEBLOG_SCHEMA)
+    unzipped = read_fixed_width(spark, str(gz), fixtures.F1_WEBLOG_SCHEMA)
+    assert unzipped.count() == 1000
+    assert unzipped.exceptAll(plain).count() == 0
+    assert plain.exceptAll(unzipped).count() == 0
 
 
-def test_ascii_mode_on_multibyte_shifts_only_downstream(spark, fixture_dir):
-    """encoding='ascii' on the UTF-8 fixture: byte offsets agree with
-    rune offsets UP TO the first multibyte rune, so F3's leading int Id
-    still parses on every row; fields AFTER a multibyte rune slice at
-    shifted offsets (documented contract — declare ascii only for
-    single-byte feeds; typed fields would null out via fallible casts)."""
-    df = read_fixed_width(spark, str(fixture_dir / "f3.txt"),
-                          fixtures.F3_UTF8_SCHEMA, encoding="ascii")
-    rows = df.orderBy("Id").collect()
-    assert len(rows) == 200
-    assert [r.Id for r in rows] == list(range(200))
-    # a shifted downstream slice: row 0's Name starts with multibyte
-    # åäö — its byte-sliced Note differs from the rune-correct one
-    rune_rows = read_fixed_width(
-        spark, str(fixture_dir / "f3.txt"),
-        fixtures.F3_UTF8_SCHEMA).orderBy("Id").collect()
-    assert rows[0].Note != rune_rows[0].Note
-
-
-def test_schema_declared_ascii_encoding(spark, tmp_path):
-    """A schema carrying "encoding": "ascii" selects byte slicing with
-    no per-call opt-in — same values, leaner plan (no rune guard)."""
-    import json
-
-    from shredder_spark.sources.fixedwidth import read_fixed_width
-
-    mk = lambda enc: {"type": "record", "name": "t",
-                      **({"encoding": enc} if enc else {}),
-                      "fields": [
-                          {"name": "a", "type": "string", "len": 3},
-                          {"name": "b", "type": "int", "len": 4}]}
-    p = tmp_path / "f.txt"
-    p.write_bytes(b"abc  12\r\nxyz 345\r\n")
-    declared = read_fixed_width(spark, str(p), json.dumps(mk("ascii")))
-    default = read_fixed_width(spark, str(p), json.dumps(mk(None)))
-    explicit = read_fixed_width(spark, str(p), json.dumps(mk(None)),
-                                encoding="ascii")
-    rows = {(r.a, r.b) for r in declared.collect()}
-    assert rows == {("abc", 12), ("xyz", 345)}
-    assert rows == {(r.a, r.b) for r in default.collect()}
-    # declared-ascii plan matches the explicit-ascii plan (byte path)
-    import re
-
-    norm = lambda df: re.sub(
-        r"#\d+", "#", df._jdf.queryExecution().optimizedPlan().toString())
-    assert norm(declared) == norm(explicit)
-    # an explicit utf8 override beats the schema declaration
-    utf8 = read_fixed_width(spark, str(p), json.dumps(mk("ascii")),
-                            encoding="utf8")
-    assert rows == {(r.a, r.b) for r in utf8.collect()}
+def test_encoding_accepts_only_utf8(spark, fixture_dir):
+    """Fields are sliced by rune whatever the bytes: ``encoding`` names
+    no other mode."""
+    path = str(fixture_dir / "f3.txt")
+    assert read_fixed_width(spark, path, fixtures.F3_UTF8_SCHEMA,
+                            encoding="utf8").count() == 200
+    with pytest.raises(ValueError, match="encoding"):
+        read_fixed_width(spark, path, fixtures.F3_UTF8_SCHEMA,
+                         encoding="ascii")

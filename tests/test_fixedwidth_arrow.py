@@ -1,12 +1,11 @@
-"""The numpy fixed-width reader vs the expression tier.
+"""The fixed-width parse kernel vs the expression reference.
 
-The contract is EQUALITY: on an ASCII feed both tiers produce the same
-typed rows (the numpy reader is the throughput path, the expression
-tier is the semantics reference — itself golden-tested in
-test_fixedwidth.py). Edge legs cover bad numerics → null, integer
-overflow → null, footer stop, blank lines, fraction-less timestamps,
-pre-1970 dates, and the ragged-line fallback, each against the
-expression tier's output.
+The contract is EQUALITY: ``format("fixedwidth")`` over the kernel
+produces the same typed rows as ``tests/fixedwidth_reference.py``, an
+independent Spark-expression parse of the same semantics. Edge legs
+cover bad numerics → null, integer overflow → null, footer stop, blank
+lines, fraction-less timestamps, pre-1970 dates, and ragged lines, each
+against the reference's output.
 """
 
 from __future__ import annotations
@@ -15,13 +14,12 @@ import json
 
 import pytest
 
-from shredder_spark.sources.fixedwidth import read_fixed_width
 from shredder_spark.sources.fixedwidth_arrow import read_fixed_width_arrow_ds
+from tests.fixedwidth_reference import read_fixed_width_reference
 
 SCHEMA = {
     "type": "record",
     "name": "edge",
-    "encoding": "ascii",
     "fields": [
         {"name": "id", "type": "long", "len": 6},
         {"name": "qty", "type": "int", "len": 4},
@@ -77,15 +75,16 @@ def _assert_equal(a, e):
 
 def test_arrow_datasource_tier_equals_expression_tier(spark, feed):
     a = read_fixed_width_arrow_ds(spark, feed, json.dumps(SCHEMA), cores=3)
-    e = read_fixed_width(spark, feed, SCHEMA)
+    e = read_fixed_width_reference(spark, feed, SCHEMA)
     _assert_equal(a, e)
 
 
 def test_footer_stops_scan(spark, tmp_path):
     # reference semantics (ColumnBuilder.go:211-214): the footer
-    # TERMINATES the scan — rows after it never parse. The numpy
-    # reader implements termination; the expression tier approximates it with a filter, which only
-    # matches when the footer is the last line (the real-feed shape).
+    # TERMINATES the scan — rows after it never parse. The byte-range
+    # reader implements termination; read_fixed_width approximates it
+    # with a filter, which only matches when the footer is the last
+    # line (the real-feed shape).
     p = tmp_path / "footer.txt"
     body = [LINES[0], "*" * 12 + " trailer".ljust(W - 20), LINES[1]]
     p.write_bytes(("\r\n".join(body) + "\r\n").encode())
@@ -96,16 +95,17 @@ def test_footer_stops_scan(spark, tmp_path):
 
 
 def test_ragged_lines_fallback(spark, tmp_path):
-    # short and long lines exercise the pad/truncate fallback; the
-    # expression tier handles these via substring semantics, so only
-    # row counts and the well-formed row are compared
+    # short and long lines leave the byte-matrix fast path: each line
+    # is sliced by rune, so the range parses as the reference does
     p = tmp_path / "ragged.txt"
-    p.write_bytes((LINES[0] + "\r\n" + "short\r\n").encode())
+    p.write_bytes((LINES[0] + "\r\n" + "short\r\n" + LINES[1] + "xyz\r\n")
+                  .encode())
     a = read_fixed_width_arrow_ds(spark, str(p), json.dumps(SCHEMA),
                                   cores=1)
-    assert a.count() == 2
+    assert a.count() == 3
     good = a.filter("id = 1").collect()[0]
     assert good.qty == 10 and good.name == "alpha   "
+    _assert_equal(a, read_fixed_width_reference(spark, str(p), SCHEMA))
 
 
 def test_bad_numerics_null_not_throw(spark, feed):
@@ -132,7 +132,7 @@ def test_multifile_directory(spark, tmp_path):
 def test_integer_overflow_is_null(spark, tmp_path):
     # out-of-range integers: try_cast gives NULL on the expression
     # tier; the numpy fallback must not wrap (int) or raise (long)
-    schema = {"type": "record", "name": "ovf", "encoding": "ascii",
+    schema = {"type": "record", "name": "ovf",
               "fields": [{"name": "i", "type": "int", "len": 11},
                          {"name": "l", "type": "long", "len": 20}]}
     rows = [("99999999999", "99999999999999999999"),
@@ -142,7 +142,7 @@ def test_integer_overflow_is_null(spark, tmp_path):
     p = tmp_path / "ovf.txt"
     p.write_bytes("".join(f"{i:>11}{l:>20}\r\n" for i, l in rows).encode())
     a = read_fixed_width_arrow_ds(spark, str(p), json.dumps(schema))
-    e = read_fixed_width(spark, str(p), schema)
+    e = read_fixed_width_reference(spark, str(p), schema)
     _assert_equal(a, e)
     assert sorted(map(tuple, a.collect()), key=repr) == sorted(
         [(None, None), (None, 12), (-2147483648, -9223372036854775808),
@@ -227,7 +227,7 @@ def test_ts_arrow_first_equals_numpy_parse(length):
 
 
 def test_ts_adversarial_feed_equals_expression_tier(spark, tmp_path):
-    schema = {"type": "record", "name": "tsx", "encoding": "ascii",
+    schema = {"type": "record", "name": "tsx",
               "fields": [{"name": "id", "type": "int", "len": 3}] + [
                   {"name": f"t{n}", "len": n,
                    "type": {"type": "long",
@@ -237,9 +237,12 @@ def test_ts_adversarial_feed_equals_expression_tier(spark, tmp_path):
     p.write_bytes("".join(
         f"{i:>3}" + "".join(_ts_cell(v, n) for n in TS_LENS) + "\r\n"
         for i, (v, _) in enumerate(TS_CASES)).encode())
+    from shredder_spark.sources.fixedwidth import read_fixed_width
+
     a = read_fixed_width_arrow_ds(spark, str(p), json.dumps(schema))
-    e = read_fixed_width(spark, str(p), schema)
+    e = read_fixed_width_reference(spark, str(p), schema)
     _assert_equal(a, e)
+    _assert_equal(read_fixed_width(spark, str(p), schema), e)
     got = {r.id: r for r in a.collect()}
     assert got[1].t26.microsecond == 500000       # '.5' → 500000 µs
     assert got[11].t26.minute == 31 and got[11].t26.second == 0
@@ -279,7 +282,7 @@ def test_last_line_without_newline(spark, tmp_path):
         [1, -22, None, 4, 5]
     _assert_equal(
         read_fixed_width_arrow_ds(spark, str(p), json.dumps(SCHEMA), cores=3),
-        read_fixed_width(spark, str(p), SCHEMA))
+        read_fixed_width_reference(spark, str(p), SCHEMA))
 
 
 def test_range_owning_no_line(tmp_path):
@@ -331,3 +334,85 @@ def test_batches_do_not_alias_the_mapping(tmp_path, monkeypatch):
         assert made and all(m.closed for m in made)
         assert [r["name"] for r in rows] == \
             ["alpha   ", "beta  x ", "        ", "padded  "]
+
+
+# ------------------------------------------------------ rune slicing
+
+UTF8_SCHEMA = {"type": "record", "name": "u", "fields": [
+    {"name": "id", "type": "int", "len": 4},
+    {"name": "flag", "type": "boolean", "len": 2},
+    {"name": "name", "type": "string", "len": 6},
+    {"name": "raw", "type": "bytes", "len": 3},
+    {"name": "ts", "len": 30,
+     "type": {"type": "long", "logicalType": "timestamp-micros"}},
+]}
+TS = "1995-06-15-10.30.00.5"
+UTF8_LINES = [
+    "   1" "J " "名前abcd" "é日1" + TS.ljust(30),
+    "   2" "Jé" "åäöxyz" "abc" + "1995-06-15-10.30.00.12".ljust(29) + "ü",
+    "  é3" "N " "abcdef" "é  " + "1995é06-15-10.30.00".ljust(30),
+    "１２  " "Y " "ab    " "xyz" + (TS + "é").ljust(30),  # full-width digits
+    "   5" "  " "asci5 " "ab " + TS.ljust(29),        # a rune short
+    "   6" "n " "asci6 " "ab " + TS.ljust(30) + "extra",
+]
+
+
+def test_utf8_feed_equals_reference(spark, tmp_path):
+    """Non-ASCII runes anywhere, also in typed fields, and lines of the
+    wrong width: the kernel agrees with the reference, quarantine
+    included, through both adapters."""
+    from shredder_spark.sources.fixedwidth import read_fixed_width
+
+    p = tmp_path / "u.txt"
+    p.write_bytes(("\r\n".join(UTF8_LINES) + "\r\n").encode())
+    got = read_fixed_width(spark, str(p), UTF8_SCHEMA, with_quarantine=True)
+    want = read_fixed_width_reference(spark, str(p), UTF8_SCHEMA,
+                                      with_quarantine=True)
+    _assert_equal(got.clean, want.clean)
+    _assert_equal(got.quarantine, want.quarantine)
+    _assert_equal(read_fixed_width_arrow_ds(spark, str(p),
+                                            json.dumps(UTF8_SCHEMA), cores=2),
+                  read_fixed_width_reference(spark, str(p), UTF8_SCHEMA))
+    rows = {r.name: r for r in read_fixed_width(
+        spark, str(p), UTF8_SCHEMA).collect()}
+    assert rows["名前abcd"].id == 1 and bytes(rows["名前abcd"].raw) == "é日1".encode()
+    assert rows["åäöxyz"].flag is True and rows["åäöxyz"].ts.microsecond == 120000
+    assert rows["abcdef"].id is None and rows["abcdef"].ts is not None
+    assert rows["ab    "].id is None and rows["ab    "].ts is None
+
+
+def test_parse_never_imports_pandas(tmp_path):
+    """Masked arrays are built from buffers: a fresh process that parses
+    batches with NULLs in every type, on the byte-matrix path and on the
+    rune path with quarantine, never imports pandas."""
+    import os
+    import subprocess
+    import sys
+
+    ascii_feed, utf8_feed = tmp_path / "a.txt", tmp_path / "u.txt"
+    ascii_feed.write_bytes(("\r\n".join(LINES) + "\r\n").encode())
+    utf8_lines = LINES[1:3] + ["é" + LINES[2][1:], "short"]
+    utf8_feed.write_bytes(("\r\n".join(utf8_lines) + "\r\n").encode())
+    code = """
+import json, sys
+import numpy as np
+from shredder_spark.avro_schema import parse_avro_fixed_schema
+from shredder_spark.sources.fixedwidth_arrow import (
+    FixedWidthArrowReader, _split_lines, parse_lines)
+schema, ascii_feed, utf8_feed = sys.argv[1:]
+fs = parse_avro_fixed_schema(schema)
+reader = FixedWidthArrowReader({"path": ascii_feed, "cores": "1"}, fs)
+[batch] = [b for part in reader.partitions() for b in reader.read(part)]
+checked = parse_lines(_split_lines(np.fromfile(utf8_feed, np.uint8)), fs,
+                      quarantine=True)
+for b in (batch, checked):
+    assert all(b.column(f.name).null_count for f in fs.fields
+               if f.type_name != "string"), b
+errors = checked.column("_errors").to_pylist()
+assert errors[0] == [] and errors[3] == ["row_width:5"], errors
+assert "bad_id" in errors[1] and "bad_id" in errors[2], errors
+assert "pandas" not in sys.modules
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code, json.dumps(SCHEMA),
+                    str(ascii_feed), str(utf8_feed)], check=True, cwd=root)

@@ -1,9 +1,9 @@
-"""``spark.read.format("fixedwidth")`` — the numpy reader as a Spark
-format: it must agree row-for-row with the expression tier on ASCII
-fixtures, plan exactly ``cores`` chunk-aligned partitions, stop at the
-footer, and refuse non-ASCII input instead of mis-slicing it. The
-streaming tier over a landing directory must agree with it file by
-file."""
+"""``spark.read.format("fixedwidth")`` and ``read_fixed_width`` — two
+adapters over the one parse kernel: both must agree row-for-row with
+the expression reference on the ASCII, UTF-8 and dirty fixtures, the
+reader must plan exactly ``cores`` chunk-aligned partitions and stop
+at the footer, and the streaming tier over a landing directory must
+agree with it file by file."""
 
 from __future__ import annotations
 
@@ -16,35 +16,37 @@ from shredder_spark.sources.fixedwidth_arrow import (
     FixedWidthDataSource, read_fixed_width_arrow_ds,
     register_fixedwidth_source,
 )
+from tests.fixedwidth_reference import read_fixed_width_reference
 from tests.fixtures import (
     F1_WEBLOG_SCHEMA, F2_ALLTYPES_SCHEMA, F3_UTF8_SCHEMA,
-    write_f1, write_f2, write_f3,
+    write_f1, write_f2, write_f3, write_f4,
 )
+
+
+def _assert_same(got, want):
+    # nullability differs (the kernel declares every field nullable)
+    assert got.schema.simpleString() == want.schema.simpleString()
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 @pytest.mark.parametrize("schema,writer,fname", [
     (F1_WEBLOG_SCHEMA, write_f1, "f1.txt"),
     (F2_ALLTYPES_SCHEMA, write_f2, "f2.txt"),
+    (F3_UTF8_SCHEMA, write_f3, "f3.txt"),
+    (F1_WEBLOG_SCHEMA, write_f4, "f4.txt"),
 ])
 def test_datasource_matches_expression_tier(spark, tmp_path, schema, writer, fname):
     path = str(tmp_path / fname)
     writer(path)
-    via_ds = read_fixed_width_arrow_ds(spark, path, schema, cores=5)
-    via_expr = read_fixed_width(spark, path, schema)
-    # nullability differs (the reader declares every field nullable)
-    assert via_ds.schema.simpleString() == via_expr.schema.simpleString()
-    assert via_ds.count() == via_expr.count()
-    assert via_ds.exceptAll(via_expr).count() == 0
-    assert via_expr.exceptAll(via_ds).count() == 0
-
-
-def test_non_ascii_input_raises(spark, tmp_path):
-    # byte slicing shifts every field after a multibyte rune; the
-    # reader must refuse the feed and point at the rune-correct tier
-    path = str(tmp_path / "f3.txt")
-    write_f3(path, rows=10)
-    with pytest.raises(Exception, match="read_fixed_width"):
-        read_fixed_width_arrow_ds(spark, path, F3_UTF8_SCHEMA).collect()
+    _assert_same(read_fixed_width(spark, path, schema),
+                 read_fixed_width_reference(spark, path, schema))
+    # the byte-range reader ends a line at LF and drops its trailing
+    # CRs, as the text source does with its default separators (F4 has
+    # LF-only rows, which CRLF framing merges into the next row)
+    _assert_same(read_fixed_width_arrow_ds(spark, path, schema, cores=5),
+                 read_fixed_width_reference(spark, path, schema, line_sep=None))
 
 
 def test_partition_planning_and_boundary_alignment(spark, tmp_path):

@@ -142,7 +142,9 @@ def fresh_session(codec: str):
     if active is not None:
         active.stop()
         time.sleep(2)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from shredder_spark.session import default_cpus
+
+    cpus = default_cpus()
     return (SparkSession.builder.appName(f"conf-sweep-{codec}")
             .master(f"local[{cpus}]")
             .config("spark.sql.session.timeZone", "UTC")
