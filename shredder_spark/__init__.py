@@ -19,5 +19,9 @@ Design tenets (see SURVEY.md §7):
 
 __version__ = "0.1.0"
 
-from shredder_spark.session import get_spark  # noqa: F401
-from shredder_spark.catalog import TABLES, register_views  # noqa: F401
+from shredder_spark.utils import skip_unchanged_zip_rereads
+
+skip_unchanged_zip_rereads()  # every worker running our code imports this
+
+from shredder_spark.session import get_spark  # noqa: F401,E402
+from shredder_spark.catalog import TABLES, register_views  # noqa: F401,E402

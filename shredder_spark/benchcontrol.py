@@ -10,10 +10,11 @@ control: a FROZEN synthetic workload (range scan → modular projection
 codegen, no parquet, no registry — immune to engine changes by
 construction) and its pinned reference median.
 
-`vs_ref = session control median / CONTROL_REF_S` is the session's
-speed factor; divide raw timings by it for cross-round comparison.
-DO NOT re-pin CONTROL_REF_S when a VM feels slow — that is exactly
-the drift this exists to expose.
+`vs_ref = session control median / control_ref_s()` is the session's
+speed factor; divide raw timings by it for cross-round comparison. The
+control's time depends on the core count as well as on VM speed, so
+each core count has its own pin. DO NOT re-pin a CONTROL_REF_S value
+when a VM feels slow — that is exactly the drift this exists to expose.
 """
 
 from __future__ import annotations
@@ -21,9 +22,19 @@ from __future__ import annotations
 import statistics
 import time
 
-# Pinned at the control's introduction (round 6, 2026-08-14,
-# local[32], steady state, interleaved inside the full sf0.1 bench).
-CONTROL_REF_S = 0.40
+# Pinned medians by core count, steady state inside bench.py: local[32]
+# at the control's introduction (round 6, 2026-08-14, sf0.1); local[4]
+# on a 4-vCPU VM (2026-10-19, sf0.01, trimmed gap median, cv 0.065).
+CONTROL_REF_S = {32: 0.40, 4: 0.463}
+
+
+def control_ref_s() -> float:
+    """The pin for ``session.default_cpus()`` cores; a core count
+    without a pin takes the nearest pinned one."""
+    from shredder_spark.session import default_cpus
+
+    cores = default_cpus()
+    return CONTROL_REF_S[min(CONTROL_REF_S, key=lambda c: abs(c - cores))]
 
 
 def drain(df) -> None:
@@ -47,11 +58,8 @@ def control_once(spark) -> None:
 
 
 class GapControl:
-    """Bracketing control gaps for long multi-query tools (round-8
-    verdict "what's wrong" #2: the profile/sweep artifacts carried the
-    noisiest stamps in the repo because they ran one 5-rep control at
-    the END of a multi-hour run — a VM phase anywhere inside the run
-    was invisible).
+    """Bracketing control gaps for long multi-query tools: one control
+    at the end of a multi-hour run misses a VM phase inside it.
 
     Usage: call ``maybe_gap()`` at every query boundary (it runs a
     control gap every ``every``-th call, so a 688-query profile pays
@@ -93,37 +101,32 @@ class GapControl:
         if gi + 1 < len(self.gaps):
             local += self.gaps[gi + 1]
         med = statistics.median(local)
-        return med / CONTROL_REF_S if med else 1.0
+        return med / control_ref_s() if med else 1.0
 
     def stamp(self) -> dict:
         reps = [t for g in self.gaps for t in g]
+        out = {"reps_n": len(reps), "gaps_n": len(self.gaps),
+               "per_gap": self.per_gap, "every": self.every,
+               "trim_frac": self.trim_frac}
         if not reps:
             # same key set as the populated branch: artifact consumers
             # keying on reps_n / vs_ref must not see a shape change
             # when no gaps ran (r9 advice)
-            return {"reps_n": 0, "gaps_n": 0, "per_gap": self.per_gap,
-                    "every": self.every, "median": None, "cv": None,
-                    "cv_raw": None, "trim_frac": self.trim_frac,
-                    "ref_s": CONTROL_REF_S, "vs_ref": None}
+            return {**out, "median": None, "cv": None, "cv_raw": None,
+                    "ref_s": control_ref_s(), "vs_ref": None}
         s = sorted(reps)
         k = int(len(s) * self.trim_frac)
-        core = s[k:len(s) - k] or s
-        med = statistics.median(core)
-        mean = statistics.fmean(core)
-        raw_mean = statistics.fmean(reps)
-        return {
-            "reps_n": len(reps),
-            "gaps_n": len(self.gaps),
-            "per_gap": self.per_gap,
-            "every": self.every,
-            "median": round(med, 4),
-            "cv": round(statistics.pstdev(core) / mean if mean else 0.0, 4),
-            "cv_raw": round(statistics.pstdev(reps) / raw_mean
-                            if raw_mean else 0.0, 4),
-            "trim_frac": self.trim_frac,
-            "ref_s": CONTROL_REF_S,
-            "vs_ref": round(med / CONTROL_REF_S, 4),
-        }
+        return {**out, **_speed(s[k:len(s) - k] or s),
+                "cv_raw": _speed(reps)["cv"]}
+
+
+def _speed(times: list[float]) -> dict:
+    """Median, cv and speed factor of control times."""
+    med, mean, ref = (statistics.median(times), statistics.fmean(times),
+                      control_ref_s())
+    return {"median": round(med, 4),
+            "cv": round(statistics.pstdev(times) / mean if mean else 0.0, 4),
+            "ref_s": ref, "vs_ref": round(med / ref, 4)}
 
 
 def control_stats(spark, reps: int = 5, warmup: int = 1) -> dict:
@@ -135,12 +138,4 @@ def control_stats(spark, reps: int = 5, warmup: int = 1) -> dict:
         t0 = time.perf_counter()
         control_once(spark)
         times.append(round(time.perf_counter() - t0, 4))
-    med = statistics.median(times)
-    mean = statistics.fmean(times)
-    return {
-        "reps": times,
-        "median": round(med, 4),
-        "cv": round(statistics.pstdev(times) / mean if mean else 0.0, 4),
-        "ref_s": CONTROL_REF_S,
-        "vs_ref": round(med / CONTROL_REF_S, 4),
-    }
+    return {"reps": times, **_speed(times)}

@@ -131,14 +131,6 @@ def minhash_from_hashes(hashes: Column, num_perm: int = 64,
     ])
 
 
-def minhash_signature(text: Column, num_perm: int = 64, seed: int = 1) -> Column:
-    """num_perm-wide MinHash signature of the token set, as
-    array<bigint>. Single-expression convenience form; for hot paths
-    stage ``token_hashes`` through a projection first (see
-    ``minhash_from_hashes``)."""
-    return minhash_from_hashes(token_hashes(text), num_perm, seed)
-
-
 class _SplitMix:
     """SplitMix64 — tiny deterministic PRNG for permutation constants."""
 

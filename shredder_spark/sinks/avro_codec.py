@@ -193,8 +193,8 @@ def compress_block(codec: str, data: bytes) -> bytes:
         c = zlib.compressobj(9, zlib.DEFLATED, -zlib.MAX_WBITS)
         return c.compress(data) + c.flush()
     if codec == "snappy":
-        body = _snappy().compress(data).to_pybytes()
-        return body + struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
+        return b"".join((_snappy().compress(data),
+                         struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)))
     raise ValueError(f"unsupported codec {codec!r}")
 
 
@@ -274,14 +274,6 @@ def write_ocf(
             _flush()
     _flush()
     return n_total
-
-
-def read_ocf(fh: io.BufferedIOBase):
-    """Yield rows (tuples) from an Avro OCF stream; also returns codec via
-    the generator's ``.schema`` attribute pattern — use
-    :func:`read_ocf_all` for the simple (schema, rows) form."""
-    schema, rows = read_ocf_all(fh)
-    return rows
 
 
 def read_ocf_all(fh: io.BufferedIOBase) -> tuple[dict, list[tuple]]:

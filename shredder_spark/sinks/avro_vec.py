@@ -3,36 +3,27 @@
 The per-row codec (``avro_codec.RecordCodec``) encodes field-by-field
 in Python — fine for Kafka framing (one record per message), but the
 OCF sink hot loop is O(rows × fields) interpreter work. This module
-encodes a whole Arrow batch with numpy, padded-matrix style (r12 —
-the r8 form scattered every field's bytes into the output with fancy
-int64 indices, and those gather/scatters were ~90% of encode time):
+encodes a whole Arrow batch with numpy, padded-matrix style:
 
 1. per field, compute the encoded byte LENGTH of every row (varint
-   widths via threshold sums, string lengths straight from the Arrow
-   offsets buffer);
-2. allocate a padded (rows × Σ field-slot-widths) byte matrix plus a
-   same-shape validity mask that starts all true, where each field
-   owns a fixed column block sized to its batch-max width (varint max
-   ≤ 10, string block = header max + longest value). Every write is
-   then a STRIDED column or block store — no fancy indexing. A varint
-   of ≤ 8 bytes is built in one uint64 per row (7-bit groups spread
-   into bytes, continuation bits OR'ed from a per-width table) and
-   stored as one block; uniform-width string payloads (the
-   fixed-width-feed shape) land as one reshaped-view block copy. A
-   field writes the mask only where it can leave holes: null rows, a
-   varint column whose width varies, strings of unequal length;
+   widths via threshold sums, string lengths from the Arrow offsets);
+2. allocate a padded (rows × Σ field-slot-widths) byte matrix and a
+   same-shape validity mask that starts all true; each field owns a
+   fixed column block sized to its batch-max width, and every write is
+   a strided store of one ``V{k}`` element per row, never a fancy
+   index. A varint of ≤ 8 bytes is built in one uint64 per row, and a
+   field clears mask bytes only where it can leave holes (null rows,
+   varints of varying width, strings of unequal length);
 3. one boolean-mask compress of the raveled matrix emits the exact
    row-major Avro byte stream (row lengths → cumsum gives per-row
    offsets for the OCF/Kafka framings).
 
 Exactness: ``encode_batch(rc, batch)`` equals
 ``b"".join(rc.encode(row) for row in rows)`` byte-for-byte (pinned in
-tests/test_avro_vec.py), so every existing OCF reader — ours and any
-spec-conforming one — consumes the output unchanged.
-
-Type surface: the engine's wire form (SURVEY.md §1.3) — boolean, int,
-long, float, double, bytes, string, and the temporal logicals as
-pre-converted epoch ints — with optional ``["null", T]`` unions.
+tests/test_avro_vec.py). Type surface: the engine's wire form
+(SURVEY.md §1.3) — boolean, int, long, float, double, bytes, string,
+and the temporal logicals as epoch ints — with optional ``["null", T]``
+unions. Columns are read off their Arrow buffers.
 """
 
 from __future__ import annotations
@@ -43,13 +34,12 @@ from typing import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from shredder_spark.sinks.avro_codec import (
     MAGIC, RecordCodec, compress_block, write_bytes, write_long)
+from shredder_spark.sources.fixedwidth_arrow import _null_mask, _rows
 
 _VARINT_MAX = 10
-_U64_ONE = np.uint64(1)
 _ENC_ROWS = 16384  # encode sub-slice: padded matrix + mask stay cache-resident
 
 _INT_TYPES = frozenset({
@@ -96,15 +86,16 @@ _LIVE = np.array([(1 << 8 * k) - 1 & 0x0101010101010101
 
 
 def _bytes8(w: np.ndarray, k: int) -> np.ndarray:
-    """Bytes 0..k-1 of each little-endian uint64 as an (n, k) view."""
-    return w.astype("<u8", copy=False).view(np.uint8).reshape(-1, 8)[:, :k]
+    """Bytes 0..k-1 of each little-endian uint64, one ``V{k}`` per row."""
+    return _rows(w.astype("<u8", copy=False).view(np.uint8)
+                 .reshape(-1, 8)[:, :k])
 
 
 def _fill_varint(pb: np.ndarray, pm: np.ndarray, off: int,
                  z: np.ndarray, nb: np.ndarray, vmax: int,
                  valid: np.ndarray | None, dense: bool) -> None:
-    """Varint bytes into the padded matrix, stored as one (n, vmax)
-    block — per-plane column stores hit a different cache line per row
+    """Varint bytes into the padded matrix, stored as one ``V{vmax}``
+    per row — per-plane column stores hit a different cache line per row
     (the padded row stride) and were ~3× slower. ``pm`` starts all
     true and is written only when the field leaves holes (``dense`` is
     false: a null row, or a varint shorter than ``vmax``). Dead bytes
@@ -120,21 +111,20 @@ def _fill_varint(pb: np.ndarray, pm: np.ndarray, off: int,
         for lo, hi, sh in _SPREAD:
             w = (w & lo) | ((w & hi) << sh)
         w |= _CONT[vmax] if dense else np.take(_CONT, nb)
-        pb[:, off:off + vmax] = _bytes8(w, vmax)
+        _rows(pb[:, off:off + vmax])[:] = _bytes8(w, vmax)
         if dense:
             return
         k = nb if valid is None else np.where(valid, nb, 0)
-        pm[:, off:off + vmax] = _bytes8(np.take(_LIVE, k), vmax) \
-            .view(np.bool_)
+        _rows(pm[:, off:off + vmax])[:] = _bytes8(np.take(_LIVE, k), vmax)
         return
     planes = ((z[:, None] >> _SHIFTS[:vmax]) & np.uint64(0x7F)) \
         .astype(np.uint8)
     live = nb[:, None] > np.arange(vmax, dtype=np.int64)
     planes |= (nb[:, None] > np.arange(1, vmax + 1)).view(np.uint8) \
         << np.uint8(7)
-    pb[:, off:off + vmax] = planes
-    pm[:, off:off + vmax] = live if valid is None \
-        else (live & valid[:, None])
+    _rows(pb[:, off:off + vmax])[:] = _rows(planes)
+    _rows(pm[:, off:off + vmax])[:] = _rows(
+        live if valid is None else (live & valid[:, None]))
 
 
 class _Prep:
@@ -146,6 +136,18 @@ class _Prep:
         self.fill = fill       # fill(pb, pm, off) -> None
 
 
+def _values(col: pa.Array, dtype) -> np.ndarray:
+    """``col`` cast to ``dtype`` as a numpy view of its value buffer;
+    NULL slots hold whatever the buffer holds. (``to_numpy`` of an
+    array with NULLs, ``is_null`` and ``fill_null`` import pandas.)"""
+    dtype = np.dtype(dtype)
+    pa_type = pa.from_numpy_dtype(dtype)
+    if col.type != pa_type:
+        col = col.cast(pa_type)
+    return np.frombuffer(col.buffers()[1], dtype, len(col),
+                         col.offset * dtype.itemsize)
+
+
 def _prep_field(fname: str, tname: str, null_index: int,
                 col: pa.Array) -> _Prep:
     if isinstance(col, pa.ChunkedArray):  # pragma: no cover
@@ -155,13 +157,12 @@ def _prep_field(fname: str, tname: str, null_index: int,
     has_nulls = col.null_count > 0
     if has_nulls and not nullable:
         raise ValueError(f"null in non-nullable field {fname}")
-    valid = None
-    if has_nulls:
-        valid = ~col.is_null().to_numpy(zero_copy_only=False)
+    valid = ~_null_mask(col) if has_nulls else None
 
     if tname == "boolean":
-        fc = pc.fill_null(col, False) if has_nulls else col
-        vals = fc.to_numpy(zero_copy_only=False).astype(np.uint8)
+        vals = np.unpackbits(np.frombuffer(col.buffers()[1], np.uint8),
+                             count=col.offset + n,
+                             bitorder="little")[col.offset:]
         vlen = np.ones(n, dtype=np.int64)
         vslots = 1
 
@@ -171,10 +172,10 @@ def _prep_field(fname: str, tname: str, null_index: int,
                 pm[:, off] = valid
 
     elif tname in _INT_TYPES:
-        iv = pc.fill_null(col, 0) if has_nulls else col
-        if not pa.types.is_integer(iv.type):
-            iv = iv.cast(pa.int64())  # temporal logicals → epoch ints
-        v = iv.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+        # temporal logicals cast to their epoch ints
+        v = _values(col, np.int64)
+        if valid is not None:
+            v = np.where(valid, v, 0)
         z = _zigzag(v)
         vlen = _varint_len(z)
         vslots = int(vlen.max()) if n else 1
@@ -185,31 +186,28 @@ def _prep_field(fname: str, tname: str, null_index: int,
 
     elif tname in ("float", "double"):
         width = 4 if tname == "float" else 8
-        fc = pc.fill_null(col, 0.0) if has_nulls else col
-        v = fc.to_numpy(zero_copy_only=False) \
-            .astype(f"<f{width}", copy=False)
-        planes = np.ascontiguousarray(v).view(np.uint8).reshape(n, width)
+        v = _values(col, f"<f{width}")
         vlen = np.full(n, width, dtype=np.int64)
         vslots = width
 
         def fill_val(pb, pm, off):
-            pb[:, off:off + width] = planes
+            _rows(pb[:, off:off + width])[:] = v.view(f"V{width}")
             if valid is not None:
                 pm[:, off:off + width] = valid[:, None]
 
     elif tname in ("string", "bytes"):
-        fc = (pc.fill_null(col, "" if tname == "string" else b"")
-              if has_nulls else col)
-        big = pa.types.is_large_string(fc.type) \
-            or pa.types.is_large_binary(fc.type)
+        big = pa.types.is_large_string(col.type) \
+            or pa.types.is_large_binary(col.type)
         odt, osz = (np.int64, 8) if big else (np.int32, 4)
-        offs = np.frombuffer(fc.buffers()[1], dtype=odt, count=n + 1,
-                             offset=fc.offset * osz).astype(np.int64)
-        dbuf = fc.buffers()[2]
+        offs = np.frombuffer(col.buffers()[1], dtype=odt, count=n + 1,
+                             offset=col.offset * osz).astype(np.int64)
+        dbuf = col.buffers()[2]
         data = (np.frombuffer(dbuf, dtype=np.uint8)
                 if dbuf is not None else np.empty(0, dtype=np.uint8))
         src = offs[:-1]
         lens = offs[1:] - src
+        if valid is not None:  # a NULL slot may still span bytes
+            lens = np.where(valid, lens, 0)
         zl = _zigzag(lens)
         hlen = _varint_len(zl)
         vlen = hlen + lens
@@ -230,13 +228,12 @@ def _prep_field(fname: str, tname: str, null_index: int,
                 return
             if uniform:
                 start = int(src[0])
-                pb[:, poff:poff + wmax] = \
-                    data[start:start + n * wmax].reshape(n, wmax)
+                _rows(pb[:, poff:poff + wmax])[:] = \
+                    data[start:start + n * wmax].view(f"V{wmax}")
                 return
             cols = np.arange(wmax, dtype=np.int64)
-            live = lens[:, None] > cols
-            pm[:, poff:poff + wmax] = \
-                live if valid is None else (live & valid[:, None])
+            # NULL rows have length 0 here: no live byte
+            _rows(pm[:, poff:poff + wmax])[:] = _rows(lens[:, None] > cols)
             if len(data):
                 idx = np.minimum(src[:, None] + cols, len(data) - 1)
                 pb[:, poff:poff + wmax] = data[idx]
@@ -252,18 +249,14 @@ def _prep_field(fname: str, tname: str, null_index: int,
     null_byte = np.uint8(null_index << 1)
     val_byte = np.uint8((1 - null_index) << 1)
     if valid is None:
-        length = 1 + vlen
-
-        def fill(pb, pm, off):
-            pb[:, off] = val_byte
-            fill_val(pb, pm, off + 1)
+        length, union_bytes = 1 + vlen, val_byte
     else:
         length = 1 + np.where(valid, vlen, 0)
         union_bytes = np.where(valid, val_byte, null_byte)
 
-        def fill(pb, pm, off):
-            pb[:, off] = union_bytes
-            fill_val(pb, pm, off + 1)
+    def fill(pb, pm, off):
+        pb[:, off] = union_bytes
+        fill_val(pb, pm, off + 1)
 
     return _Prep(length, vslots + 1, fill)
 
@@ -304,11 +297,12 @@ def _encode_core(rc: RecordCodec, batch: pa.RecordBatch):
 
 def encode_batch(rc: RecordCodec, batch: pa.RecordBatch) -> bytes:
     """Avro binary of every record in ``batch``, concatenated —
-    byte-identical to the per-row codec's output."""
-    if batch.num_rows == 0:
-        return b""
-    out, _, _ = _encode_core(rc, batch)
-    return out.tobytes()
+    byte-identical to the per-row codec's output. A batch is encoded in
+    cache-sized sub-slices (the padded matrix of a 64 Ki-row batch
+    spills L2; ~25% faster at 16 Ki — r12 ingest-bar sweep) whose byte
+    arrays are joined once."""
+    return b"".join(_encode_core(rc, batch.slice(t, _ENC_ROWS))[0]
+                    for t in range(0, batch.num_rows, _ENC_ROWS))
 
 
 def encode_batch_rows(rc: RecordCodec, batch: pa.RecordBatch) -> list:
@@ -353,18 +347,7 @@ def write_ocf_arrow(
             chunk = batch.slice(s, min(block_rows, batch.num_rows - s))
             if chunk.num_rows == 0:
                 continue
-            if chunk.num_rows > _ENC_ROWS:
-                # encode in cache-sized sub-slices (the padded matrix
-                # of a 64 Ki-row chunk spills L2; ~25% faster at 16 Ki
-                # — r12 ingest-bar sweep) and concatenate: the block
-                # payload is a plain record concatenation, so the
-                # bytes are identical to one-shot encoding
-                payload = b"".join(
-                    encode_batch(rc, chunk.slice(t, _ENC_ROWS))
-                    for t in range(0, chunk.num_rows, _ENC_ROWS))
-            else:
-                payload = encode_batch(rc, chunk)
-            comp = compress_block(codec, payload)
+            comp = compress_block(codec, encode_batch(rc, chunk))
             head = io.BytesIO()
             write_long(head, chunk.num_rows)
             write_long(head, len(comp))

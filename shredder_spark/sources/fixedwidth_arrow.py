@@ -84,6 +84,12 @@ def _null_mask(arr: pa.Array) -> np.ndarray:
     return bits[arr.offset:] == 0
 
 
+def _rows(block: np.ndarray) -> np.ndarray:
+    """An ``(n, k > 0)`` block with contiguous rows as ``n`` ``V{k}``
+    elements, so a copy moves whole rows, not bytes (no ``V0`` dtype)."""
+    return block.view(f"V{block.shape[1]}")[:, 0]
+
+
 def _string_list(values: list[str]) -> pa.Array:
     """``pa.array(values)`` without its pandas import."""
     blobs = [v.encode() for v in values]
@@ -98,8 +104,9 @@ def _string_array(mat: np.ndarray, start: int, length: int) -> pa.Array:
     offsets (pa.py_buffer wraps the numpy memory — no tobytes round
     trip). The blob is always a copy: ``mat`` may be a view of the
     mapped input file, which no batch may outlive."""
-    blob = np.array(mat[:, start:start + length]).reshape(-1)
     n = mat.shape[0]
+    blob = (np.array(_rows(mat[:, start:start + length])).view(np.uint8)
+            if length else np.empty(0, dtype=np.uint8))
     offsets = np.arange(0, (n + 1) * length, length, dtype=np.int32)
     return pa.StringArray.from_buffers(
         n, pa.py_buffer(offsets), pa.py_buffer(blob))
@@ -210,7 +217,7 @@ def _ts_micros_arrow(mat: np.ndarray, start: int, length: int) -> pa.Array:
     w = 19 if length <= 20 else min(length, 26)
     # a writable private copy (ascontiguousarray may return a
     # read-only view of the mapped file)
-    blk = np.array(mat[:, start:start + w].view(np.uint8))
+    blk = np.array(_rows(mat[:, start:start + w])).view((np.uint8, w))
     for off, ch in _ISO_SEPS:
         blk[:, off] = ch
     if w > 19:

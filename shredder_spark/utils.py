@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -43,3 +45,28 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
                     zf.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)
     _SHIPPED.add(app_id)
+
+
+def skip_unchanged_zip_rereads() -> None:
+    """PySpark's worker calls ``importlib.invalidate_caches()`` before
+    every task; on CPython < 3.12 that re-reads the directory of every
+    zip on ``sys.path`` (~0.3 s of CPU per task). Make each importer
+    re-read only when its archive's ``(st_ino, st_size, st_mtime_ns)``
+    differs from its last read, or it has none. Idempotent."""
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 12) or hasattr(cls, "_stock_invalidate"):
+        return
+    stock = cls.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_dir_stamp", None):
+            stock(self)
+            self._dir_stamp = stamp
+
+    cls._stock_invalidate = stock
+    cls.invalidate_caches = invalidate_caches

@@ -331,3 +331,65 @@ def test_fused_kernel_golden_md5(spark, tmp_path):
         with open(os.path.join(out, name), "rb") as fh:
             h.update(fh.read())
     assert h.hexdigest() == _GOLDEN_FUSED_MD5
+
+
+def test_encode_never_imports_pandas():
+    """The encoder reads every column off its Arrow buffers: a fresh
+    process encodes a batch with NULLs in every wire type (a NULL
+    string slot that still spans bytes, temporals through ``wire_batch``)
+    byte-for-byte as the per-row codec does, and never imports pandas."""
+    import os
+    import subprocess
+    import sys
+
+    code = """
+import json, sys
+import numpy as np
+import pyarrow as pa
+from shredder_spark.sinks.avro_codec import RecordCodec
+from shredder_spark.sinks.avro_vec import encode_batch, wire_batch
+from shredder_spark.sources.fixedwidth_arrow import _masked
+rc = RecordCodec(sys.argv[1])
+null = np.array([False, True, False, False, True])
+n = len(null)
+bits = lambda a: pa.py_buffer(np.packbits(a, bitorder="little"))
+def varlen(pa_type, blobs, spans):
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(spans, out=offsets[1:])
+    return pa.Array.from_buffers(pa_type, n, [bits(~null), pa.py_buffer(
+        np.array(offsets)), pa.py_buffer(b"".join(blobs))], int(null.sum()))
+flags = np.array([True, True, False, True, False])
+ints = np.array([0, 99, -64, 2**31 - 1, 7])
+longs = np.array([1, 2**60, -65, -2**63, 300])
+floats = np.array([1.5, 9.0, -0.25, 3e38, 2.0])
+strs = [b"", b"gone", "h\\u00e9".encode(), b"x" * 130, b""]
+micros = np.array([0, 5, -1, 2**62, 86_400_000_000])
+days = np.array([0, 3, -1, 19000, 1])
+cols = [
+    pa.Array.from_buffers(pa.bool_(), n, [bits(~null), bits(flags)], 2),
+    _masked(pa.int32(), n, ints.astype(np.int32), null),
+    _masked(pa.int64(), n, longs, null),
+    _masked(pa.float32(), n, floats.astype(np.float32), null),
+    _masked(pa.float64(), n, floats, null),
+    varlen(pa.string(), strs, [len(s) for s in strs]),
+    varlen(pa.binary(), strs, [len(s) for s in strs]),
+    _masked(pa.timestamp("us"), n, micros, null),
+    _masked(pa.date32(), n, days.astype(np.int32), null),
+]
+batch = wire_batch(pa.RecordBatch.from_arrays(
+    cols, names=[f[0] for f in rc.fields]))
+values = [flags.tolist(), ints.tolist(), longs.tolist(),
+          floats.astype(np.float32).tolist(), floats.tolist(),
+          [s.decode() for s in strs], strs, micros.tolist(), days.tolist()]
+rows = [tuple(None if null[i] else v[i] for v in values) for i in range(n)]
+assert encode_batch(rc, batch) == b"".join(rc.encode(r) for r in rows)
+assert "pandas" not in sys.modules
+"""
+    schema = json.dumps({"type": "record", "name": "t", "fields": [
+        {"name": name, "type": ["null", t]} for name, t in [
+            ("b", "boolean"), ("i", "int"), ("l", "long"), ("f", "float"),
+            ("d", "double"), ("s", "string"), ("y", "bytes"),
+            ("ts", {"type": "long", "logicalType": "timestamp-micros"}),
+            ("dt", {"type": "int", "logicalType": "date"})]]})
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code, schema], check=True, cwd=root)

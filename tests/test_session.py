@@ -30,3 +30,13 @@ def test_reader_defaults_to_default_cpus(monkeypatch, tmp_path):
         {"path": path}, parse_avro_fixed_schema(F1_WEBLOG_SCHEMA))
     assert reader.cores == len(os.sched_getaffinity(0))
     assert len(reader.partitions()) == reader.cores
+
+
+def test_control_pin_follows_the_core_count(monkeypatch):
+    from shredder_spark.benchcontrol import CONTROL_REF_S, control_ref_s
+
+    assert CONTROL_REF_S[32] == 0.40
+    for cores, pin in ((4, CONTROL_REF_S[4]), (2, CONTROL_REF_S[4]),
+                       (32, 0.40), (48, 0.40)):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", str(cores))
+        assert control_ref_s() == pin, cores
