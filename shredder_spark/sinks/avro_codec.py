@@ -225,16 +225,10 @@ def decompress_block(codec: str, data: bytes, uncompressed_hint: int | None = No
 # ------------------------------------------------------------------ OCF
 
 
-def write_ocf(
-    fh: io.BufferedIOBase,
-    codec_obj: RecordCodec,
-    rows: Iterable[Iterable[Any]],
-    *,
-    codec: str = "snappy",
-    sync: bytes | None = None,
-    block_rows: int = 4096,
-) -> int:
-    """Write an Avro OCF stream; returns row count."""
+def write_ocf_header(fh: io.BufferedIOBase, codec_obj: RecordCodec,
+                     codec: str, sync: bytes | None = None) -> bytes:
+    """Magic, metadata (schema, codec) and sync marker; returns the sync
+    marker (default: derived from the schema)."""
     if sync is None:
         sync = (zlib.crc32(codec_obj.schema_json.encode()) & 0xFFFFFFFF).to_bytes(4, "big") * 4
     assert len(sync) == SYNC_SIZE
@@ -248,6 +242,20 @@ def write_ocf(
     write_long(meta, 0)
     fh.write(meta.getvalue())
     fh.write(sync)
+    return sync
+
+
+def write_ocf(
+    fh: io.BufferedIOBase,
+    codec_obj: RecordCodec,
+    rows: Iterable[Iterable[Any]],
+    *,
+    codec: str = "snappy",
+    sync: bytes | None = None,
+    block_rows: int = 4096,
+) -> int:
+    """Write an Avro OCF stream; returns row count."""
+    sync = write_ocf_header(fh, codec_obj, codec, sync)
 
     n_total = 0
     block = io.BytesIO()

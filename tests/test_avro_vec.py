@@ -10,11 +10,14 @@ import random
 import numpy as np
 import pyarrow as pa
 import pytest
+from hypothesis import HealthCheck, Phase, given, settings
+from hypothesis import strategies as st
 
+from shredder_spark.sinks import avro_vec
 from shredder_spark.sinks.avro_codec import (
     RecordCodec, read_ocf_all, write_ocf)
 from shredder_spark.sinks.avro_vec import (
-    encode_batch, wire_batch, write_ocf_arrow)
+    encode_batch, encode_batch_rows, wire_batch, write_ocf_arrow)
 
 SCHEMA = json.dumps({
     "type": "record", "name": "t", "fields": [
@@ -298,7 +301,6 @@ def test_fused_kernel_on_unicode_feed(spark, tmp_path):
 def test_encode_batch_rows_per_record():
     rc = RecordCodec(SCHEMA)
     rows = _random_rows(400, 17)
-    from shredder_spark.sinks.avro_vec import encode_batch_rows
     got = encode_batch_rows(rc, _batch(rows))
     assert got == [rc.encode(r) for r in rows]
     assert encode_batch_rows(rc, _batch([])) == []
@@ -393,3 +395,228 @@ assert "pandas" not in sys.modules
             ("dt", {"type": "int", "logicalType": "date"})]]})
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     subprocess.run([sys.executable, "-c", code, schema], check=True, cwd=root)
+
+
+def test_encode_batch_unconverted_date32_with_nulls():
+    # a date32 column that did not go through ``wire_batch`` is read as
+    # its int32 day numbers, NULLs included
+    rc = RecordCodec(json.dumps({"type": "record", "name": "d", "fields": [
+        {"name": "d", "type": ["null", {"type": "int",
+                                        "logicalType": "date"}]},
+        {"name": "t", "type": {"type": "long",
+                               "logicalType": "timestamp-micros"}}]}))
+    days = [0, None, -1, 19_000, None, 2**31 - 1, -2**31]
+    micros = [0, 1, -1, 2**62, 5, -2**63, 2**63 - 1]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(days, type=pa.int32()).view(pa.date32()),
+         pa.array(micros, type=pa.int64()).view(pa.timestamp("us"))],
+        names=["d", "t"])
+    want = b"".join(rc.encode(r) for r in zip(days, micros))
+    assert encode_batch(rc, batch) == want
+    assert encode_batch(rc, batch.slice(2, 4)) == \
+        b"".join(rc.encode(r) for r in list(zip(days, micros))[2:6])
+
+
+# ------------------------------------------------ property: vs RecordCodec
+
+_S = avro_vec._SLICE
+# batch sizes around the encoder's slice: empty, one row, one slice
+# short / exact / over, and a partial fourth slice
+_SIZES = [0, 1, _S - 1, _S, _S + 1, 3 * _S + 7]
+# wire type → (Arrow storage types it may arrive as, varint widths the
+# type's values can take; None for non-varint types)
+_WIRE = {
+    "boolean": ([pa.bool_()], None),
+    "int": ([pa.int32()], 5),
+    "long": ([pa.int64()], 10),
+    "date": ([pa.int32(), pa.date32()], 5),
+    "time-millis": ([pa.int32(), pa.time32("ms")], 5),
+    "time-micros": ([pa.int64(), pa.time64("us")], 10),
+    "timestamp-millis": ([pa.int64(), pa.timestamp("ms")], 10),
+    "timestamp-micros": ([pa.int64(), pa.timestamp("us")], 10),
+    "float": ([pa.float32()], None),
+    "double": ([pa.float64()], None),
+    "string": ([pa.string(), pa.large_string()], None),
+    "bytes": ([pa.binary(), pa.large_binary()], None),
+}
+_RUNES = ["a", "Z", "0", " ", "é", "ß", "日", "語", "😀"]
+
+
+def _unzigzag(z: int) -> int:
+    return (z >> 1) ^ -(z & 1)
+
+
+def _varint_values(rng, n, lo, hi, bits):
+    """``n`` ints whose zigzag varints are ``lo``..``hi`` bytes wide,
+    within a ``bits``-bit signed range."""
+    out = []
+    for _ in range(n):
+        w = rng.randint(lo, hi)
+        zlo = 0 if w == 1 else 1 << 7 * (w - 1)
+        zhi = min((1 << 7 * w) - 1, (1 << bits) - 1)
+        out.append(_unzigzag(rng.randint(zlo, zhi)))
+    return out
+
+
+def _column(rng, tname, n, shape):
+    """``n`` Python values of one wire type; ``shape`` picks constant,
+    equal-width or ragged content."""
+    kind, a, b = shape
+    if tname == "boolean":
+        return [kind == "const" or rng.random() < 0.5 for _ in range(n)]
+    if tname in ("float", "double"):
+        pool = [0.0, -0.0, 1.5, -2.25, float("inf"), 3e38, -1e-3]
+        vals = [rng.choice(pool) if kind == "const" else
+                rng.uniform(-1e30, 1e30) for _ in range(n)]
+        if tname == "float":
+            vals = [float(np.float32(v)) for v in vals]
+        return [vals[0]] * n if kind == "const" and n else vals
+    if tname in ("string", "bytes"):
+        if kind == "ragged":
+            runes = _RUNES if tname == "string" else _RUNES[:4]
+            vals = ["".join(rng.choice(runes)
+                            for _ in range(rng.randint(0, a)))
+                    for _ in range(n)]
+        else:  # every value the same byte length
+            rune = rng.choice(["a", "é", "日"] if tname == "string" else ["x"])
+            vals = ["".join(rng.choice([rune, rune.upper()])
+                            for _ in range(a)) for _ in range(n)]
+        if kind == "const":
+            vals = [vals[0]] * n if n else []
+        return vals if tname == "string" else [v.encode() for v in vals]
+    bits = 32 if _WIRE[tname][1] == 5 else 64
+    vals = _varint_values(rng, n, a, b, bits)
+    return [vals[0]] * n if kind == "const" and n else vals
+
+
+@st.composite
+def _encoder_case(draw):
+    nfields = draw(st.integers(1, 12))
+    fields, specs = [], []
+    for i in range(nfields):
+        tname = draw(st.sampled_from(sorted(_WIRE)))
+        storages, vmax = _WIRE[tname]
+        storage = draw(st.sampled_from(storages))
+        kind = draw(st.sampled_from(["const", "equal", "ragged"]))
+        if vmax:
+            lo = draw(st.integers(1, vmax))
+            hi = lo if kind == "equal" else draw(st.integers(lo, vmax))
+            shape = (kind, lo, hi)
+        else:
+            shape = (kind, draw(st.integers(0, 40)), 0)
+        nulls = draw(st.sampled_from(["none", "none", "some", "all"]))
+        order = draw(st.sampled_from(["plain", "null-first", "null-last"]))
+        if nulls != "none" and order == "plain":
+            order = "null-first"
+        ftype = tname if tname in ("boolean", "int", "long", "float",
+                                   "double", "string", "bytes") \
+            else {"type": "int" if vmax == 5 else "long",
+                  "logicalType": tname}
+        if order != "plain":
+            ftype = ["null", ftype] if order == "null-first" \
+                else [ftype, "null"]
+        fields.append({"name": f"c{i}", "type": ftype})
+        specs.append((tname, storage, shape, nulls))
+    n = draw(st.sampled_from(_SIZES))
+    offset = draw(st.sampled_from([0, 0, 1, 37]))
+    seed = draw(st.integers(0, 2**32 - 1))
+    return fields, specs, n, offset, seed
+
+
+def _encoder_batch(specs, n, offset, seed):
+    """Python rows and the Arrow batch of ``n`` of them, sliced out of a
+    longer batch at ``offset`` when it is non-zero."""
+    rng = random.Random(seed)
+    total = n + offset + (3 if offset else 0)
+    cols, arrays = [], []
+    for tname, storage, shape, nulls in specs:
+        vals = _column(rng, tname, total, shape)
+        if nulls == "all":
+            vals = [None] * total
+        elif nulls == "some":
+            vals = [None if rng.random() < 0.3 else v for v in vals]
+        if pa.types.is_temporal(storage):
+            arr = pa.array(vals, type=pa.int32() if storage.bit_width == 32
+                           else pa.int64()).view(storage)
+        else:
+            arr = pa.array(vals, type=storage)
+        cols.append(vals[offset:offset + n])
+        arrays.append(arr)
+    batch = pa.RecordBatch.from_arrays(
+        arrays, names=[f"c{i}" for i in range(len(specs))])
+    return list(zip(*cols)) if n else [], batch.slice(offset, n)
+
+
+# no shrink phase: an example is a schema, sizes and a seed, short to
+# print as drawn, while shrinking cases of thousands of rows takes minutes
+@settings(derandomize=True, deadline=None, max_examples=100,
+          phases=[Phase.explicit, Phase.generate],
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_encoder_case())
+def test_encode_batch_property_vs_record_codec(case):
+    fields, specs, n, offset, seed = case
+    rc = RecordCodec(json.dumps({"type": "record", "name": "p",
+                                 "fields": fields}))
+    rows, batch = _encoder_batch(specs, n, offset, seed)
+    want = [rc.encode(r) for r in rows]
+    assert encode_batch(rc, batch) == b"".join(want)
+    if n <= _S:
+        assert encode_batch_rows(rc, batch) == want
+
+
+def _exact_tail_case(fields, cols):
+    """Encode through both codecs; also report whether any segment of
+    the block is written exactly (the tail that could leave its row)."""
+    rc = RecordCodec(json.dumps({"type": "record", "name": "x",
+                                 "fields": fields}))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(v, type=t) for v, t in cols],
+        names=[f["name"] for f in fields])
+    rows = list(zip(*[v for v, _ in cols]))
+    assert encode_batch(rc, batch) == b"".join(rc.encode(r) for r in rows)
+    assert encode_batch_rows(rc, batch) == [rc.encode(r) for r in rows]
+    pieces = [p for (f, t, ni), col in zip(rc.fields, batch.columns)
+              for p in avro_vec._prep_field(f, t, ni, col)]
+    return any(seg[3] for seg in avro_vec._layout(pieces, len(rows))[2])
+
+
+def test_encode_exact_tail_ragged_long_last():
+    rng = random.Random(1)
+    n = 3 * _S + 7
+    longs = _varint_values(rng, n, 1, 10, 64)
+    words = ["", "ab", "日本", "x" * 30]
+    assert _exact_tail_case(
+        [{"name": "s", "type": "string"}, {"name": "l", "type": "long"}],
+        [([rng.choice(words) for _ in range(n)], pa.string()),
+         (longs, pa.int64())])
+
+
+def test_encode_exact_tail_ragged_long_then_boolean():
+    # the long's slack (up to 9 bytes) exceeds the one boolean byte left
+    # in its row, so its segment must not spill into the next row
+    rng = random.Random(2)
+    n = _S + 1
+    assert _exact_tail_case(
+        [{"name": "l", "type": "long"}, {"name": "b", "type": "boolean"}],
+        [(_varint_values(rng, n, 1, 10, 64), pa.int64()),
+         ([rng.random() < 0.5 for _ in range(n)], pa.bool_())])
+
+
+@pytest.mark.parametrize("all_null", [False, True])
+def test_encode_exact_tail_all_null_rows(all_null):
+    # a fully NULL row is one union byte per field: every segment's
+    # slack can exceed what is left of such a row
+    rng = random.Random(3)
+    n = _S + 3
+    kinds = [("long", pa.int64()), ("string", pa.string()),
+             ("double", pa.float64()), ("bytes", pa.binary()),
+             ("int", pa.int32())]
+    dead = [all_null or rng.random() < 0.4 for _ in range(n)]
+    cols = []
+    for name, t in kinds:
+        widths = {"long": (1, 10), "int": (1, 5)}.get(name, (20, 0))
+        vals = _column(rng, name, n, ("ragged", *widths))
+        cols.append(([None if d else v for v, d in zip(vals, dead)], t))
+    fields = [{"name": f"f{i}", "type": [k, "null"] if i % 2 else ["null", k]}
+              for i, (k, _) in enumerate(kinds)]
+    assert _exact_tail_case(fields, cols)
