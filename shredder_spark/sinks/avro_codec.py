@@ -41,16 +41,19 @@ def _zigzag_decode(n: int) -> int:
     return (n >> 1) ^ -(n & 1)
 
 
-def write_long(buf: io.BytesIO, n: int) -> None:
+def encode_long(n: int) -> bytes:
+    """The zigzag varint of ``n``."""
     n = _zigzag_encode(n) & 0xFFFFFFFFFFFFFFFF
-    while True:
-        b = n & 0x7F
+    out = bytearray()
+    while n > 0x7F:
+        out.append(n & 0x7F | 0x80)
         n >>= 7
-        if n:
-            buf.write(bytes((b | 0x80,)))
-        else:
-            buf.write(bytes((b,)))
-            return
+    out.append(n)
+    return bytes(out)
+
+
+def write_long(buf: io.BytesIO, n: int) -> None:
+    buf.write(encode_long(n))
 
 
 def read_long(buf: io.BufferedIOBase) -> int:
@@ -266,10 +269,7 @@ def write_ocf(
         if not n_block:
             return
         payload = compress_block(codec, block.getvalue())
-        head = io.BytesIO()
-        write_long(head, n_block)
-        write_long(head, len(payload))
-        fh.write(head.getvalue())
+        fh.write(encode_long(n_block) + encode_long(len(payload)))
         fh.write(payload)
         fh.write(sync)
         block, n_block = io.BytesIO(), 0

@@ -18,9 +18,11 @@ numpy, by row segments:
    padded rows (template broadcast once), and each segment is copied
    whole into the output through a byte-stride ``V{k}`` view, in segment
    order, so the next segment of the same row overwrites each dead tail.
-4. *Exact tails.* A segment whose slack can exceed the fewest live bytes
-   left after it in its row would spill into the next row: it is written
-   exactly, one scatter per distinct live length.
+4. *Exact tails.* In a row where a segment's slack exceeds the live
+   bytes left after it, its dead tail would spill into the next row, so
+   there it is written exactly: the bytes all such rows have in one
+   copy, the rest in runs of 2^b bytes, one copy per bit of the spread
+   of their live lengths.
 
 ``encode_batch(rc, batch)`` equals ``b"".join(rc.encode(row) for row in
 rows)`` byte-for-byte (tests/test_avro_vec.py). Type surface: the
@@ -39,7 +41,7 @@ import numpy as np
 import pyarrow as pa
 
 from shredder_spark.sinks.avro_codec import (
-    RecordCodec, compress_block, write_ocf_header)
+    RecordCodec, compress_block, encode_long, write_ocf_header)
 from shredder_spark.sources.fixedwidth_arrow import _null_mask, _rows
 
 _VARINT_MAX = 10
@@ -67,14 +69,9 @@ def _varint_len(z: np.ndarray, zmax: int) -> np.ndarray:
     return n
 
 
-def _uvarint(z: int) -> bytes:
-    """One varint of the non-negative (zigzagged) int ``z``."""
-    out = bytearray()
-    while z > 0x7F:
-        out.append(z & 0x7F | 0x80)
-        z >>= 7
-    out.append(z)
-    return bytes(out)
+def _width(z: int) -> int:
+    """Byte count of the varint of the non-negative (zigzagged) ``z``."""
+    return max(1, -(-z.bit_length() // 7))
 
 
 _SHIFTS = np.arange(_VARINT_MAX, dtype=np.uint64) * np.uint64(7)
@@ -108,15 +105,16 @@ def _per_row(vals: np.ndarray, live) -> _Piece:
                   rows=lambda s, e: vals[s:e])
 
 
-def _varint(z: np.ndarray, valid: np.ndarray | None) -> _Piece:
-    """The varints of zigzagged ``z`` (0 in NULL rows, which have no
-    live byte). Dead bytes carry garbage."""
+def _varint(v: np.ndarray, valid: np.ndarray | None) -> _Piece:
+    """The zigzag varints of ``v`` (0 in NULL rows, which have no live
+    byte). Dead bytes carry garbage."""
+    z = _zigzag(v)
     zmin, zmax = int(z.min()), int(z.max())
     if valid is None and zmin == zmax:
-        b = _uvarint(zmax)
+        b = encode_long(int(v[0]))
         return _Piece(len(b), len(b), const=b)
-    vmax = len(_uvarint(zmax))
-    if valid is None and len(_uvarint(zmin)) == vmax:
+    vmax = _width(zmax)
+    if valid is None and _width(zmin) == vmax:
         nb, live = None, vmax
     else:
         nb = _varint_len(z, zmax)
@@ -182,7 +180,7 @@ def _prep_field(fname: str, tname: str, null_index: int,
                     else f"<i{col.type.bit_width // 8}")
         if valid is not None:
             v = np.where(valid, v, 0)
-        pieces = [_varint(_zigzag(v), valid)]
+        pieces = [_varint(v, valid)]
     elif tname in ("float", "double"):
         width = 4 if tname == "float" else 8
         pieces = fixed(_values(col, f"<f{width}").view(f"V{width}"))
@@ -201,14 +199,14 @@ def _prep_field(fname: str, tname: str, null_index: int,
         if valid is None and int(lens.min()) == wmax:
             # equal lengths (the fixed-width-feed shape): one header for
             # all rows, and the payload buffer IS an (n, wmax) matrix
-            head = _uvarint(wmax << 1)
+            head = encode_long(wmax)
             pieces = [_Piece(len(head), len(head), const=head)]
             if wmax:
                 start = int(src[0])
                 pieces += fixed(data[start:start + n * wmax]
                                 .view(f"V{wmax}"))
         else:
-            pieces = [_varint(_zigzag(lens), valid)]
+            pieces = [_varint(lens, valid)]
             if wmax:
                 if int(src[-1]) + wmax > len(data):
                     data = np.concatenate(
@@ -234,7 +232,9 @@ def _prep_field(fname: str, tname: str, null_index: int,
 def _layout(pieces: list, n: int):
     """Template row, per-row stores and segments of a block's pieces;
     returns (template, stores, segments, row lengths). A segment is
-    (first slot, end slot, live bytes per row or one int, exact)."""
+    (first slot, end slot, live bytes per row or one int, spill): spill
+    marks the rows whose dead tail would pass their row's end, or is
+    None when no row's does."""
     width = sum(p.k for p in pieces)
     template = np.zeros(width, dtype=np.uint8)
     stores, segs = [], []
@@ -252,36 +252,37 @@ def _layout(pieces: list, n: int):
             fixed += p.live
     if off > a:
         segs.append([a, off, fixed])
-    total = np.full(n, sum(s[2] for s in segs if isinstance(s[2], int)),
-                    dtype=np.int64)
-    rest = 0  # fewest live bytes after a segment in any row
+    rest = np.zeros(n, dtype=np.int64)  # live bytes after a segment
+    least = 0                           # ... in the row with fewest
     for seg in reversed(segs):
         a, b, live = seg
-        least = live if isinstance(live, int) else int(live.min())
-        seg.append(b - a - least > rest)
-        rest += least
-        if not isinstance(live, int):
-            total += live
-    return template, stores, segs, total
+        slack = b - a - live
+        spill = None
+        if b - a - np.min(live) > least:
+            spill = slack > rest
+            if not spill.any():
+                spill = None
+        seg.append(spill)
+        rest = rest + live
+        least = int(rest.min())
+    return template, stores, segs, rest
 
 
-def _write_exact(win, pos, seg, live) -> None:
-    """Only the live bytes of each row's segment: one scatter per
-    distinct live length."""
-    lo, hi = int(live.min()), int(live.max())
-    if lo == hi:
-        if lo:
-            win(lo)[pos] = _rows(seg[:, :lo])
-        return
-    # a stable sort of int16 is numpy's radix sort: linear in the rows
-    order = np.argsort(live.astype(np.int16 if hi < 1 << 15 else np.int64),
-                       kind="stable")
-    ls = live[order]
-    cuts = np.flatnonzero(ls[1:] != ls[:-1]) + 1
-    for g in np.split(order, cuts):
-        k = int(live[g[0]])
-        if k:
-            win(k)[pos[g]] = _rows(seg[:, :k])[g]
+def _write_exact(win, pos, rows, a: int, live, r) -> None:
+    """Only the live bytes of rows ``r``'s segment (the one starting at
+    slot ``a`` of ``rows``): the bytes every such row has in one copy,
+    the rest in runs of 2^b bytes, one copy per bit of the spread."""
+    pos, live = pos[r], live[r]
+    flat = rows.reshape(-1)
+    src = r * rows.shape[1] + a
+    lo = int(live.min())
+    if lo:
+        win(lo)[pos] = _windows(flat, lo)[src]
+    d = live - lo
+    for b in reversed(range(int(d.max()).bit_length())):
+        q = np.flatnonzero(d & (1 << b))
+        off = lo + (d[q] & -(2 << b))  # the row's bytes before this run
+        win(1 << b)[pos[q] + off] = _windows(flat, 1 << b)[src[q] + off]
 
 
 def _encode_core(rc: RecordCodec, batch: pa.RecordBatch):
@@ -319,13 +320,16 @@ def _encode_core(rc: RecordCodec, batch: pa.RecordBatch):
         for off, k, fill in stores:
             _rows(rows[:, off:off + k])[:] = fill(s, e)
         pos = starts[s:e]
-        for a, b, live, exact in segs:
+        for a, b, live, spill in segs:
             if not isinstance(live, int):
                 live = live[s:e]
-            if exact:
-                _write_exact(win, pos, rows[:, a:b], live)
-            else:
+            if spill is None or not spill[s:e].any():
                 win(b - a)[pos] = _rows(rows[:, a:b])
+            else:  # rows that spill are written exactly, the rest whole
+                keep = np.flatnonzero(~spill[s:e])
+                win(b - a)[pos[keep]] = _rows(rows[:, a:b])[keep]
+                _write_exact(win, pos, rows, a, live,
+                             np.flatnonzero(spill[s:e]))
             pos = pos + live
     return out, starts, total
 
@@ -365,7 +369,7 @@ def write_ocf_arrow(
         for s in range(0, batch.num_rows, block_rows):
             chunk = batch.slice(s, block_rows)
             comp = compress_block(codec, encode_batch(rc, chunk))
-            fh.write(_uvarint(chunk.num_rows << 1) + _uvarint(len(comp) << 1))
+            fh.write(encode_long(chunk.num_rows) + encode_long(len(comp)))
             fh.write(comp)
             fh.write(sync)
             n_total += chunk.num_rows
@@ -393,12 +397,18 @@ def fixed_width_to_avro_fused(
     tasks: int | None = None,
 ) -> int:
     """Reference-shaped single-stage ingest: each task streams its byte
-    ranges through ``read(part)`` → ``wire_batch`` → ``write_ocf_arrow``
-    (snappy), one OCF file per range, so data never becomes Spark rows
-    nor crosses into the JVM (the reference's chunked parse→serialize
-    pipeline, `fixed2avro/Exporters.go:105-138`). Returns total rows
-    written; files match ``write_avro_ocf``'s schema (nullable unions)
-    and naming. ``tasks`` defaults to ``session.default_cpus()``."""
+    ranges through the fixed-width reader's public pair —
+    ``read(part)`` → ``wire_batch`` → ``write_ocf_arrow`` (snappy), one
+    OCF file per range — so data never materializes as Spark rows and
+    never crosses into the JVM (cf. the reference's chunked
+    parse→serialize pipeline, `fixed2avro/Exporters.go:105-138`). The
+    per-partition imperative body is exactly what RDD.mapPartitions is
+    for; everything upstream/downstream of ingest stays DataFrame.
+
+    Returns total rows written. Output files match
+    ``write_avro_ocf``'s schema (nullable unions) and naming. ``tasks``
+    defaults to ``session.default_cpus()``.
+    """
     import os
 
     from shredder_spark.avro_schema import FixedSchema, \

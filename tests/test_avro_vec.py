@@ -577,7 +577,8 @@ def _exact_tail_case(fields, cols):
     assert encode_batch_rows(rc, batch) == [rc.encode(r) for r in rows]
     pieces = [p for (f, t, ni), col in zip(rc.fields, batch.columns)
               for p in avro_vec._prep_field(f, t, ni, col)]
-    return any(seg[3] for seg in avro_vec._layout(pieces, len(rows))[2])
+    return any(seg[3] is not None
+               for seg in avro_vec._layout(pieces, len(rows))[2])
 
 
 def test_encode_exact_tail_ragged_long_last():
