@@ -33,6 +33,7 @@ as their int storage) — with optional ``["null", T]`` unions.
 
 from __future__ import annotations
 
+import functools
 import io
 from collections import namedtuple
 from typing import Iterable, Iterator
@@ -253,18 +254,11 @@ def _layout(pieces: list, n: int):
     if off > a:
         segs.append([a, off, fixed])
     rest = np.zeros(n, dtype=np.int64)  # live bytes after a segment
-    least = 0                           # ... in the row with fewest
     for seg in reversed(segs):
         a, b, live = seg
-        slack = b - a - live
-        spill = None
-        if b - a - np.min(live) > least:
-            spill = slack > rest
-            if not spill.any():
-                spill = None
-        seg.append(spill)
+        spill = b - a - live > rest
+        seg.append(spill if spill.any() else None)
         rest = rest + live
-        least = int(rest.min())
     return template, stores, segs, rest
 
 
@@ -304,12 +298,7 @@ def _encode_core(rc: RecordCodec, batch: pa.RecordBatch):
     starts = np.zeros(n, dtype=np.int64)
     np.cumsum(total[:-1], out=starts[1:])
     out = np.empty(int(starts[-1] + total[-1]), dtype=np.uint8)
-    views = {}
-
-    def win(k):
-        if k not in views:
-            views[k] = _windows(out, k)
-        return views[k]
+    win = functools.lru_cache(None)(lambda k: _windows(out, k))
 
     # every slot a store below leaves alone holds the template's byte
     pb = np.empty((min(n, _SLICE), len(template)), dtype=np.uint8)
