@@ -2,40 +2,26 @@
 
 Semantics match the reference's file exporter
 (`fixed2avro/Exporters.go:105-138`): one snappy-compressed Avro OCF
-file per partition (reference: per chunk), named ``<prefix><nnnn>.avro``.
+file per partition (reference: per chunk).
 
-Implementation notes:
-- When a spark-avro datasource is on the classpath we defer to it
-  (``df.write.format("avro")`` — JVM-side, the 100 TB path). This
-  container doesn't ship it, so the fallback encodes with the pure-
-  Python codec via ``mapInArrow``: Arrow batches in, one OCF file per
-  partition out, only a stats row returned to the plan. Temporal
-  columns are converted to epoch ints JVM-side before the Python
-  boundary, so the encoder hot loop never touches datetime objects.
-- Reads go through ``binaryFile`` + ``mapInArrow`` — each task decodes
-  whole files; parallelism = number of files, matching how the files
-  were produced.
+Both directions are one JVM call: ``AvroFileFormat`` ships inside
+``spark-sql_2.13-4.1.2.jar``, so Spark writes and reads OCF itself.
+``write_avro_ocf`` / ``read_avro_ocf`` exist to hide the class-name
+quirk (``AVRO_FORMAT``). ``spark_schema_to_avro`` and ``_to_wire``
+serve the Python encoders (the fused kernel in ``sinks/avro_vec.py``
+and the Kafka value encoder in ``sinks/kafka.py``).
 """
 
 from __future__ import annotations
 
-import io
 import json
-import os
-from typing import Iterator
-
-import pyarrow as pa
 
 import pyspark.sql.functions as F
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    BinaryType, BooleanType, DataType, DateType, DoubleType, FloatType,
-    IntegerType, LongType, StringType, StructField, StructType, TimestampType,
+    BinaryType, BooleanType, DateType, DoubleType, FloatType, IntegerType,
+    LongType, StringType, StructType, TimestampType,
 )
-
-from shredder_spark.sinks.avro_codec import RecordCodec, read_ocf_all, write_ocf
-from shredder_spark.utils import ensure_package_on_executors
 
 _SPARK_TO_AVRO: list[tuple[type, object]] = [
     (BooleanType, "boolean"),
@@ -48,19 +34,6 @@ _SPARK_TO_AVRO: list[tuple[type, object]] = [
     (DateType, {"type": "int", "logicalType": "date"}),
     (TimestampType, {"type": "long", "logicalType": "timestamp-micros"}),
 ]
-
-_AVRO_TO_SPARK: dict[str, DataType] = {
-    "boolean": BooleanType(),
-    "bytes": BinaryType(),
-    "float": FloatType(),
-    "double": DoubleType(),
-    "int": IntegerType(),
-    "long": LongType(),
-    "string": StringType(),
-    "date": DateType(),
-    "timestamp-millis": TimestampType(),
-    "timestamp-micros": TimestampType(),
-}
 
 
 def spark_schema_to_avro(schema: StructType, name: str = "record") -> str:
@@ -77,34 +50,10 @@ def spark_schema_to_avro(schema: StructType, name: str = "record") -> str:
     return json.dumps({"type": "record", "name": name, "fields": fields})
 
 
-def avro_schema_to_spark(schema: dict) -> StructType:
-    out = []
-    for f in schema["fields"]:
-        t = f["type"]
-        nullable = False
-        if isinstance(t, list):
-            nullable = True
-            t = [x for x in t if x != "null"][0]
-        if isinstance(t, dict):
-            t = t.get("logicalType") or t["type"]
-        if t == "Bytes":
-            t = "bytes"
-        out.append(StructField(f["name"], _AVRO_TO_SPARK[t], nullable))
-    return StructType(out)
-
-
 # This pyspark build ships the avro FileFormat class but not its
 # DataSourceRegister service entry, so the "avro" shortname fails while
 # the full class name works — use the latter everywhere.
 AVRO_FORMAT = "org.apache.spark.sql.avro.AvroFileFormat"
-
-
-def have_spark_avro(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(AVRO_FORMAT)
-        return True
-    except Exception:
-        return False
 
 
 def _to_wire(df: DataFrame) -> DataFrame:
@@ -120,110 +69,11 @@ def _to_wire(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def write_avro_ocf(
-    df: DataFrame,
-    out_dir: str,
-    *,
-    codec: str = "snappy",
-    prefix: str = "part-",
-    record_name: str = "record",
-) -> int:
-    """Write ``df`` as one OCF file per partition; returns rows written."""
-    spark = df.sparkSession
-    if have_spark_avro(spark):
-        df.write.format(AVRO_FORMAT).option("compression", codec).mode("overwrite").save(out_dir)
-        return df.count()
-
-    ensure_package_on_executors(spark)
-    avro_schema = spark_schema_to_avro(df.schema, record_name)
-    os.makedirs(out_dir, exist_ok=True)
-    wire = _to_wire(df)
-
-    def _write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from shredder_spark.sinks.avro_vec import write_ocf_arrow
-
-        pid = TaskContext.get().partitionId()
-        rc = RecordCodec(avro_schema)
-        path = os.path.join(out_dir, f"{prefix}{pid:05d}.avro")
-        with open(path, "wb") as fh:
-            # vectorized batch encoder (byte-identical records to the
-            # per-row codec — tests/test_avro_vec.py)
-            n = write_ocf_arrow(fh, rc, batches, codec=codec)
-        if n == 0:
-            os.remove(path)  # reference writes no empty-chunk files
-        yield pa.RecordBatch.from_pydict({"partition": [pid], "rows": [n]})
-
-    stats = wire.mapInArrow(_write_partition, "partition long, rows long")
-    return int(stats.agg(F.sum("rows")).collect()[0][0] or 0)
+def write_avro_ocf(df: DataFrame, out_dir: str, *, codec: str = "snappy") -> None:
+    """Write ``df`` as one OCF file per partition, replacing ``out_dir``."""
+    df.write.format(AVRO_FORMAT).option("compression", codec).mode("overwrite").save(out_dir)
 
 
-def read_avro_ocf(spark: SparkSession, path: str, schema: dict | str | None = None) -> DataFrame:
-    """Read a directory of OCF files into a DataFrame (distributed: one
-    task per file via binaryFile + mapInArrow)."""
-    if have_spark_avro(spark):
-        return spark.read.format(AVRO_FORMAT).load(path)
-
-    ensure_package_on_executors(spark)
-    files = spark.read.format("binaryFile").load(
-        os.path.join(path, "*.avro") if not path.endswith(".avro") else path)
-    if schema is None:
-        first = files.select("content").limit(1).collect()
-        if not first:
-            raise FileNotFoundError(f"no avro files under {path}")
-        schema, _ = read_ocf_all(io.BytesIO(bytes(first[0][0])))
-    elif isinstance(schema, str):
-        schema = json.loads(schema)
-    spark_schema = avro_schema_to_spark(schema)
-
-    # wire schema: temporals as ints (converted back JVM-side below)
-    wire_fields = []
-    for f in spark_schema.fields:
-        if isinstance(f.dataType, DateType):
-            wire_fields.append(StructField(f.name, IntegerType(), True))
-        elif isinstance(f.dataType, TimestampType):
-            wire_fields.append(StructField(f.name, LongType(), True))
-        else:
-            wire_fields.append(StructField(f.name, f.dataType, True))
-    wire_schema = StructType(wire_fields)
-    wire_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in wire_schema.fields)
-    names = [f.name for f in wire_schema.fields]
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    arrow_schema = pa.schema(
-        [pa.field(f.name, to_arrow_type(f.dataType), nullable=True)
-         for f in wire_schema.fields])
-
-    def _decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            content_idx = batch.schema.get_field_index("content")
-            for content in batch.column(content_idx).to_pylist():
-                _, rows = read_ocf_all(io.BytesIO(content))
-                if not rows:
-                    continue
-                cols = {n: [r[i] for r in rows] for i, n in enumerate(names)}
-                yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
-
-    wire_df = files.select("content").mapInArrow(_decode, wire_ddl)
-    cols = []
-    for f in spark_schema.fields:
-        if isinstance(f.dataType, DateType):
-            cols.append(F.date_add(F.lit("1970-01-01").cast("date"), F.col(f.name)).alias(f.name))
-        elif isinstance(f.dataType, TimestampType):
-            ms = "millis" in _logical_of(schema, f.name)
-            expr = F.timestamp_millis(F.col(f.name)) if ms else F.timestamp_micros(F.col(f.name))
-            cols.append(expr.alias(f.name))
-        else:
-            cols.append(F.col(f.name))
-    return wire_df.select(*cols)
-
-
-def _logical_of(schema: dict, field_name: str) -> str:
-    for f in schema["fields"]:
-        if f["name"] != field_name:
-            continue
-        t = f["type"]
-        if isinstance(t, list):
-            t = [x for x in t if x != "null"][0]
-        if isinstance(t, dict):
-            return t.get("logicalType") or ""
-    return ""
+def read_avro_ocf(spark: SparkSession, path: str) -> DataFrame:
+    """Read a directory (or glob) of OCF files into a DataFrame."""
+    return spark.read.format(AVRO_FORMAT).load(path)

@@ -394,9 +394,10 @@ def fixed_width_to_avro_fused(
     per-partition imperative body is exactly what RDD.mapPartitions is
     for; everything upstream/downstream of ingest stays DataFrame.
 
-    Returns total rows written. Output files match
-    ``write_avro_ocf``'s schema (nullable unions) and naming. ``tasks``
-    defaults to ``session.default_cpus()``.
+    Returns total rows written. Output files are named
+    ``part-<nnnnn>.avro`` by range; their schema is
+    ``spark_schema_to_avro`` of the parsed columns (nullable unions).
+    ``tasks`` defaults to ``session.default_cpus()``.
     """
     import os
 

@@ -63,7 +63,8 @@ def export(
     if topic is None:
         raise ValueError("Kafka export needs topic=")
     from shredder_spark.sinks.kafka import (
-        KafkaUnavailableError, have_kafka_datasource, prepare_kafka_batch,
+        KafkaUnavailableError, _warn_wire_tier, have_kafka_datasource,
+        prepare_kafka_batch,
     )
 
     cfg = config or KafkaConfig.from_env(bootstrap_servers=target)
@@ -89,12 +90,7 @@ def export(
     # one producer connection per task, partition column honored.
     # Identical bytes on the broker; slower than the JVM producer
     # (see KAFKA_BENCH: this is the jar-less tier, not the hot path).
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "spark-sql-kafka connector absent: exporting topic %r through "
-        "the pure-Python kafkawire tier (PLAINTEXT, reduced "
-        "throughput)", topic)
+    _warn_wire_tier("exporting", topic)
     from shredder_spark.sinks.kafka_wire import write_kafka_wire
 
     write_kafka_wire(batch, topic, cfg.bootstrap_servers)

@@ -7,19 +7,19 @@ The reference produces Confluent-framed Avro messages (magic byte +
 
 - ``prepare_kafka_batch`` builds the exact (key, value, partition)
   DataFrame the Spark Kafka sink contract expects — the framing is a
-  column expression; Avro row encoding is ``to_avro`` when spark-avro
-  is present, else an Arrow-batched pandas UDF over the pure-Python
-  codec.
-- ``write_kafka`` / ``read_kafka_stream`` are capability-gated: this
-  container has neither the kafka connector jar nor a broker, so they
-  raise a clear error; the framing/partitioning logic stays fully
-  testable offline (byte-golden tests against the reference layout).
-- ``sinks/kafka_wire.py`` is the connector-FREE tier: a pure-Python
+  column expression; Avro row encoding is ``to_avro`` when the
+  spark-avro functions are on the classpath, else an Arrow-batched
+  pandas UDF over the vectorized encoder (``sinks/avro_vec.py``).
+- ``write_kafka`` / ``read_kafka_stream`` use the spark-sql-kafka
+  connector when it is on the classpath. Without it they log a tier
+  downgrade and go through ``sinks/kafka_wire.py``, a pure-Python
   client for the public Kafka protocol (record-batch v2 + CRC32C,
-  Produce v3, Fetch v4) — the produce→consume loop is round-trip-
-  verified over real sockets against an in-process broker
-  (tests/test_kafka_wire.py), closing the "byte-verified offline
-  only" gap as far as a jar-less sandbox allows.
+  Produce v3, Fetch v4): ``write_kafka_wire`` produces from one
+  connection per task, and ``read_kafka_stream`` reads through
+  ``format("kafkawire")``, whose one stream reader fetches each
+  partition's offset range inside the executor task that owns it.
+  The produce→consume loop is round-trip-verified over real sockets
+  against an in-process broker (tests/test_kafka_wire.py).
 - partition pinning = an explicit ``partition`` column
   (``spark_partition_id()``), which the Kafka sink honors natively.
 """

@@ -18,28 +18,23 @@ this is the connector-free tier on top of ``sinks/kafka_wire.py``
   shape as the batch tier (reference: per-partition fetch,
   ``kafkaavro/consumer.go:146-176``). The checkpoint offset is the
   classic per-partition next-offset map ``{"0": 5, "1": 3}``;
-  ``latestOffset()`` probes each partition's high watermark with a
-  minimal driver-side fetch, ``partitions(start, end)`` emits ONE
-  offset-range split per Kafka partition, and ``read(split)`` runs
-  ``consume_from`` inside the executor task that owns the split —
-  records never pass through the driver. Replay of a committed window
-  re-reads exactly ``[start, end)``, so restart semantics are
-  deterministic (pinned across a stream restart in
+  ``latestOffset()`` probes every partition's high watermark with one
+  batched ListOffsets request from the driver, ``partitions(start,
+  end)`` emits ONE offset-range split per Kafka partition, and
+  ``read(split)`` runs ``consume_from`` inside the executor task that
+  owns the split — records never pass through the driver. Replay of a
+  committed window re-reads exactly ``[start, end)``, so restart
+  semantics are deterministic (pinned across a stream restart in
   ``tests/test_kafka_wire.py``). Offsets resume at the watermark even
   when a compacted tail holds no records (``consume_from`` advances
-  past compacted batches, capped at the bound).
-
-  The round-6..8 driver-side ``SimpleDataSourceStreamReader`` tier is
-  kept behind ``option("stream_mode", "simple")`` as the comparison/
-  fallback path; the default (``partitioned``) is the 100 TB shape —
-  throughput scales with Kafka partitions instead of being bounded by
-  the driver's sequential prefetch (the one architectural driver-side
-  bottleneck the round-8 verdict flagged).
+  past compacted batches, capped at the bound). It is the only stream
+  reader.
 
 Options: ``bootstrap`` (host:port), ``topic``, ``partitions``
 (comma-separated ids, default "0"), ``starting_offsets`` (JSON map
-partition→offset, default all 0), ``stream_mode``
-(``partitioned`` | ``simple``, default ``partitioned``).
+partition→offset, default all 0), ``max_per_trigger`` (streaming only:
+records admitted per microbatch, split across partitions; default 0 =
+unlimited).
 
 Schema matches the connector's core columns:
 ``partition int, offset long, key binary, value binary``.
@@ -50,13 +45,11 @@ from __future__ import annotations
 import json
 from typing import Iterator, Sequence
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
@@ -93,19 +86,7 @@ class KafkaWireDataSource(DataSource):
 
     def streamReader(
             self, schema: StructType) -> "KafkaWirePartitionStreamReader":
-        if str(self.options.get("stream_mode",
-                                "partitioned")).lower() == "simple":
-            # raising the NotImplemented marker routes the planner to
-            # simpleStreamReader() (pyspark datasource_internal._streamReader)
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return KafkaWirePartitionStreamReader(self.options)
-
-    def simpleStreamReader(
-            self, schema: StructType) -> "KafkaWireStreamReader":
-        return KafkaWireStreamReader(self.options)
 
 
 class KafkaWireBatchReader(DataSourceReader):
@@ -138,9 +119,9 @@ class _KafkaRangePartition(InputPartition):
 
 
 class KafkaWirePartitionStreamReader(DataSourceStreamReader):
-    """Executor-side streaming tier (default): per-partition
-    offset-range splits, records fetched inside the owning task —
-    never through the driver. See module docstring."""
+    """Executor-side streaming reader: per-partition offset-range
+    splits, records fetched inside the owning task — never through
+    the driver. See module docstring."""
 
     def __init__(self, options: dict):
         (self.bootstrap, self.topic, self.parts,
@@ -216,40 +197,6 @@ class KafkaWirePartitionStreamReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         pass
-
-
-class KafkaWireStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, options: dict):
-        (self.bootstrap, self.topic, self.parts,
-         self.starting) = _opts(options)
-
-    def initialOffset(self) -> dict:
-        return {str(p): self.starting.get(p, 0) for p in self.parts}
-
-    def _consume(self, start: dict, up_to: dict | None):
-        from shredder_spark.sinks.kafka_wire import consume_from
-
-        # materialized list, not a generator: the simple-reader wrapper
-        # caches the returned iterator with copy.copy for replay, which
-        # list iterators support and generators don't
-        rows: list[tuple] = []
-        end: dict = {}
-        for p in self.parts:
-            frm = int(start.get(str(p), 0))
-            bound = None if up_to is None else int(up_to.get(str(p), frm))
-            got, nxt = consume_from(self.bootstrap, self.topic, p,
-                                    from_offset=frm, up_to=bound)
-            rows.extend((p, off, key, value) for off, key, value in got)
-            end[str(p)] = nxt
-        return rows, end
-
-    def read(self, start: dict):
-        rows, end = self._consume(start, None)
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        rows, _ = self._consume(start, end)
-        return iter(rows)
 
 
 def register_kafkawire_source(spark) -> None:

@@ -202,10 +202,14 @@ def test_wire_batch_temporals():
 def test_fused_fixed_width_to_avro(spark, tmp_path):
     """End-to-end: fixed-width feed → fused job → OCF files that decode
     to exactly what the expression reference's read + row sink would
-    produce."""
+    produce. The F2 all-types feed (dates, millis timestamps, bytes,
+    float, boolean, nullable unions) checks the other direction of
+    interop: files written by the Python encoder, read by Spark's JVM
+    Avro reader, equal the reference parse."""
     from shredder_spark.sinks.avro import read_avro_ocf, write_avro_ocf
     from shredder_spark.sinks.avro_vec import fixed_width_to_avro_fused
     from tests.fixedwidth_reference import read_fixed_width_reference
+    from tests.fixtures import F2_ALLTYPES_SCHEMA, write_f2
 
     schema = {
         "type": "record", "name": "r",
@@ -238,6 +242,19 @@ def test_fused_fixed_width_to_avro(spark, tmp_path):
     got = read_avro_ocf(spark, out_fused)
     want = read_avro_ocf(spark, out_row)
     assert got.schema == want.schema
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+    feed2 = str(tmp_path / "f2.txt")
+    write_f2(feed2, rows=500)
+    out_f2 = str(tmp_path / "fused_f2")
+    n = fixed_width_to_avro_fused(spark, feed2, F2_ALLTYPES_SCHEMA, out_f2,
+                                  tasks=3)
+    assert n == 500
+    got = read_avro_ocf(spark, out_f2)
+    want = read_fixed_width_reference(spark, feed2, F2_ALLTYPES_SCHEMA)
+    assert [(f.name, f.dataType) for f in got.schema] == \
+        [(f.name, f.dataType) for f in want.schema]
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 

@@ -290,15 +290,13 @@ def test_kafkawire_format_batch(spark):
 import pytest
 
 
-@pytest.mark.parametrize("stream_mode", ["partitioned", "simple"])
+@pytest.mark.parametrize("partitions", ["0,1"], ids=["partitioned"])
 def test_kafkawire_format_streaming_across_restarts(spark, tmp_path,
-                                                    stream_mode):
-    """Streaming tier (round-5 verdict item 7; round-9: executor-side
-    partition-based reader is the default, the driver-side simple tier
-    stays behind stream_mode=simple): accumulated stream output ==
-    batch consume_all, across a produce → stream → produce more →
-    RESTART stream (same checkpoint) cycle, no duplicates — pinned for
-    BOTH tiers."""
+                                                    partitions):
+    """Streaming reader (executor-side, one offset-range split per
+    Kafka partition): accumulated stream output == batch consume_all,
+    across a produce → stream → produce more → RESTART stream (same
+    checkpoint) cycle, no duplicates."""
     from shredder_spark.sources.kafka_wire_datasource import (
         register_kafkawire_source)
 
@@ -315,8 +313,7 @@ def test_kafkawire_format_streaming_across_restarts(spark, tmp_path,
         def run_once():
             stream = (spark.readStream.format("kafkawire")
                       .option("bootstrap", broker.bootstrap)
-                      .option("topic", "st").option("partitions", "0,1")
-                      .option("stream_mode", stream_mode)
+                      .option("topic", "st").option("partitions", partitions)
                       .load())
             q = (stream.writeStream.format("parquet")
                  .option("path", out_dir)

@@ -13,18 +13,15 @@ numbers (KAFKA_BENCH_r6.json):
    distributed tier.
 2. **streaming consume** — ``spark.readStream.format("kafkawire")``
    with ``trigger(availableNow=True)`` and a fresh checkpoint per rep
-   (full-log replay), measured for BOTH tiers: the round-9 default
-   ``partitioned`` (executor-side ``DataSourceStreamReader``, one
-   offset-range split per Kafka partition — the 100 TB shape) and the
-   legacy ``simple`` fallback (driver-side sequential prefetch,
-   jar-less tier, kept behind ``stream_mode=simple``). The round-8
-   verdict's task 1 bar: partitioned streaming ≥ the batch tier's
-   rate at 4 tasks. Round 10 adds the 32-partition empty-run
-   attribution (stream32_empty → stream32 marginal rate): the
-   stream32 vs batch32 gap is the fixed availableNow machinery, a
-   measured constant, and the planner's latestOffset probe is now ONE
-   batched multi-partition ListOffsets RPC per microbatch instead of
-   a per-partition round-trip loop.
+   (full-log replay), through the executor-side
+   ``DataSourceStreamReader`` (one offset-range split per Kafka
+   partition — the 100 TB shape). The bar: streaming ≥ the batch
+   tier's rate at 4 tasks. The 32-partition empty run attributes the
+   gap (stream32_empty → stream32 marginal rate): the stream32 vs
+   batch32 gap is the fixed
+   availableNow machinery, a measured constant, and the planner's
+   latestOffset probe is now ONE batched multi-partition ListOffsets
+   RPC per microbatch instead of a per-partition round-trip loop.
 
 Both legs are per-row Python framing + CRC32C over the public wire
 protocol; the connector jar (absent here) is the production path.
@@ -209,9 +206,8 @@ def main() -> int:
                    "after warm-up; batch = one task+socket per Kafka "
                    "partition (executor-side), streaming = availableNow "
                    "full-log replay with a fresh checkpoint per rep; "
-                   "stream4/stream32 = partitioned executor-side tier "
-                   "(default), stream4_simple = driver-side prefetch "
-                   "fallback (stream_mode=simple)"),
+                   "stream4/stream32 = executor-side partitioned "
+                   "stream reader"),
         "sink_side": "KAFKA_BENCH_r6.json",
     }
     mb = N_MSGS * len(PAYLOAD) / 1e6
@@ -237,15 +233,13 @@ def main() -> int:
 
         import tempfile
 
-        def stream(topic: str, n_parts: int,
-                   mode: str = "partitioned") -> None:
+        def stream(topic: str, n_parts: int) -> None:
             with tempfile.TemporaryDirectory() as ckpt:
                 q = (spark.readStream.format("kafkawire")
                      .option("bootstrap", broker.bootstrap)
                      .option("topic", topic)
                      .option("partitions",
                              ",".join(str(i) for i in range(n_parts)))
-                     .option("stream_mode", mode)
                      .load()
                      .writeStream.format("noop")
                      .option("checkpointLocation", ckpt)
@@ -305,9 +299,7 @@ def main() -> int:
                   ("stream4_steady",
                    lambda: stream("bench4s", 4), 4, N_STEADY),
                   ("stream4_empty", stream_caught_up, 4, 0),
-                  ("stream32_empty", stream32_caught_up, 32, 0),
-                  ("stream4_simple",
-                   lambda: stream("bench4", 4, "simple"), 4, N_MSGS)]
+                  ("stream32_empty", stream32_caught_up, 32, 0)]
 
         for _name, fn, _c, _n in stages:     # warm-up
             fn()
@@ -353,7 +345,7 @@ def main() -> int:
     print(json.dumps({k: out[k] for k in
                       ("batch4", "batch32", "stream4", "stream32",
                        "stream4_steady", "stream4_empty",
-                       "stream32_empty", "stream4_simple", "control")},
+                       "stream32_empty", "control")},
                      default=str)[:2000])
     print("written:", out_path)
     return 0
